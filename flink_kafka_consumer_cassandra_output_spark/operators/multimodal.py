@@ -1,4 +1,5 @@
-"""Multimodal (binary media) columns: schema, plumbing, feature extraction.
+"""Multimodal (binary media) columns: schema, plumbing, feature
+extraction, and real pure-Python decoders.
 
 Not in the reference (its payload is XML text; SURVEY.md north-star
 extensions); required by the project brief: image/audio/video as opaque
@@ -7,71 +8,50 @@ extensions); required by the project brief: image/audio/video as opaque
 JVM-only policy, because codec work is inherently Python/native-library
 territory.
 
-Decode coverage (r11, extended r14): pixel/sample decode is REAL for the
-formats a pure-Python decoder honestly covers -- 24-bit BMP, binary PPM,
-16-bit PCM WAV (:func:`decode_bmp`/:func:`decode_ppm`/
-:func:`decode_wav_pcm`) and, since r14, 8-bit RGB/RGBA
-PNG (:func:`decode_png`: stdlib zlib inflate + the five spec filters),
-GIF (:func:`decode_gif`: pure-Python variable-width LZW),
-and baseline JPEG -- grayscale, 3-component 4:4:4 color, AND
-chroma-subsampled 4:2:0/4:2:2 (:func:`decode_jpeg_gray` /
-:func:`decode_jpeg_baseline`: real Huffman + IDCT with per-component
-tables, sampling-factor MCU walks, replication upsampling, and libjpeg
-integer fixed-point YCbCr->RGB; hash-gated on DC-exact images by
-``mm_pixel_stats``, on AC-bearing images by ``mm_jpeg_ac_stats``, on
-4:4:4 color by ``mm_jpeg_color_stats``, and on 4:2:0 by
-``mm_jpeg_420_stats``); MP4 gets real container-level DEMUX
-(:func:`demux_mp4_samples`: stsz/stsc/stco/co64/stss sample-table
-walk incl. largesize boxes, gated by ``mm_frame_sample``).  PNG decodes
-sequential AND Adam7-interlaced layouts (r15) across the full supported
-sample-layout matrix -- 8-bit RGB/RGBA, 8/16-bit grayscale, 16-bit RGB,
-and palette at depths 1/2/4/8 with MSB-first sub-byte packing (r17,
-gated by ``mm_png_types_stats``); GIF decodes the four-pass
-interlace (both r15, gated through the unchanged ``mm_pixel_stats``
-oracle since deinterlacing restores the identical raster).  Partial MCUs decode via
-pad-to-ceil-grid + crop, gated by ``mm_jpeg_partial_mcu_stats``;
-progressive (SOF2) scans -- spectral selection AND
-successive-approximation refinement -- decode via multi-scan
-coefficient accumulation, gated by ``mm_jpeg_progressive_stats``.
-JPEG is decode-complete for the sequential + progressive Huffman
-family INCLUDING restart intervals (r16: baseline and progressive
-DRI/RST decode for real, gated two-arm by ``mm_jpeg_restart_stats``)
-and 12-bit extended sequential SOF1 -- grayscale (r16, gated by
-``mm_jpeg12_stats``) AND 3-component color with 12-bit fixed-point
-YCbCr->RGB (r17, gated by ``mm_jpeg_color12_stats``) and arithmetic-coded
-sequential SOF9 (r17: the full T.81 Annex D QM-coder -- register
-discipline, carry/stuffing, flush -- plus the Annex F DC/AC
-statistical models and restart segmentation, gated by
-``mm_jpeg_arith_stats``; the Table D.3 transcription caveat is
-recorded at the coder), arithmetic-coded PROGRESSIVE SOF10 (r17:
-banded first scans, bit-plane refinements with the G.2.2
-correction-bit model, gated by ``mm_jpeg_arith_prog_stats``) and
-hierarchical Annex J pyramids (r17: DHP walk, EXP reference
-expansion, differential frames, gated by ``mm_jpeg_hier_stats``) and
-predictive LOSSLESS SOF3 (r17: all seven Table H.1 predictors,
-modulo-2^16 accumulation, gated by ``mm_jpeg_lossless_stats``) --
-every Huffman process and every non-lossless arithmetic process in
-T.81 Table B.1 now decodes (remaining: SOF11 arithmetic lossless and
-differential-hierarchical variants); the remaining stub is codec
-video payloads (:func:`decode_media` raises ``NotImplementedError`` for
-unrecognized bytes: no PIL/ffmpeg in this container); container HEADERS
-are parsed for real.  Everything
-around the stub is real and tested: the binary column synthesis, the Arrow
-batch iteration, the output schema contract, and header-level features
-(byte length, md5 digest, deterministic pseudo-dimensions) that are
-replicated by a DuckDB oracle -- so the mapInPandas plumbing itself is
-correctness-gated, not just smoke-tested.
+Decoders, all strict (truncations, bad markers, missing tables and
+trailing bytes raise ``ValueError``) and dispatched by
+:func:`decode_media`, which sniffs the format from the bytes: BMP
+(24-bit and RLE8), PPM/PNM, baseline TIFF, PNG (every sample layout,
+sequential and Adam7), GIF (LZW, interlace, animation), WAV (PCM
+8/16/24/32-bit, G.711, IMA ADPCM), the MP4 sample-table demux, and
+JPEG: every Huffman process and every non-lossless arithmetic process
+in T.81 Table B.1, plus Huffman lossless and hierarchical pyramids
+(remaining: SOF11 arithmetic lossless and the differential-hierarchical
+variants).  The JPEG codec has one marker-segment reader
+(:class:`_JpegSegments` and the DQT/DHT/DAC/DRI parsers) under its six
+decoders, and one segment writer (``_seg``, ``_dqt``, ``_dht``,
+``_sof``, ``_sos``, ``_dri``) and two entropy writers
+(:func:`_huffman_scan`, :func:`_qm_scan`) under the ``synth_jpeg_*``
+encoders.  Codec video payloads stay a stub: :func:`decode_media`
+raises ``NotImplementedError`` for unrecognized bytes (no PIL/ffmpeg in
+this container); container HEADERS are parsed for real.
+
+Decode gates: :data:`DECODE_GATES` maps each ``*_stats`` gate
+(``pixel_stats`` ... ``wav_codec_stats``, registered as ``mm_<gate>``)
+to its per-document arm -- ``doc_id`` to the synthesized bytes, the
+``fmt`` the decode must report and, where the common shape does not
+fit, another decoder, a frame count, or the row's dimensions.
+:func:`_decode_gate` turns an arm into the public operator: one
+``mapInPandas`` over ``doc_id`` that decodes strictly, refuses a
+degraded decode (:func:`_gate_row`), and emits exact integer
+``(n, sum, min, max)`` stats per document.  Every synthesized image is a
+closed-form function of ``doc_id``, so a DuckDB oracle
+(tests/test_oracle_parity.py) re-derives every row arithmetically and
+the hash proves decode(synth(x)) == x.  Header-level features (byte
+length, md5 digest, pseudo-dimensions) are oracle-replicated too, so the
+``mapInPandas`` plumbing itself is correctness-gated, not just
+smoke-tested.
 
 Scale: mapInPandas streams Arrow batches (no per-row Python crossing, no
 collect); the operator is narrow -- feature extraction shuffles nothing.
 Real media at 100 TB would partition by (media_type, size-band) so decode
 cost is uniform per task; the synthesized ``media_type`` column models that.
 """
-
 from __future__ import annotations
 
 import hashlib
-from collections.abc import Iterator
+from collections.abc import Callable, Iterator
+from typing import NamedTuple
 
 import pandas as pd
 from pyspark.sql import DataFrame
@@ -1731,6 +1711,239 @@ def _canonical_codes(lengths: list[int], symbols: list[int]) -> dict[int, tuple[
     return out
 
 
+#: SOF component specs (Nf, then id / HV sampling / quant table per
+#: component) and SOS component selectors (Ns, then id / DC-AC tables)
+#: of the synthesizers' grayscale and 4:4:4 color frames.
+_SOF_GRAY = bytes((1, 1, 0x11, 0))
+_SOF_COLOR = bytes((3, 1, 0x11, 0, 2, 0x11, 1, 3, 0x11, 1))
+_SOS_GRAY = bytes((1, 1, 0x00))
+_SOS_COLOR = bytes((3, 1, 0x00, 2, 0x11, 3, 0x11))
+
+
+def _seg(marker: int, body: bytes) -> bytes:
+    """One marker segment: 0xFF, the marker, the 2-byte length, the body."""
+    return bytes((0xFF, marker)) + (len(body) + 2).to_bytes(2, "big") + body
+
+
+def _jfif(*parts: bytes) -> bytes:
+    """SOI, the segments and entropy-coded data in order, EOI."""
+    return b"\xff\xd8" + b"".join(parts) + b"\xff\xd9"
+
+
+def _dqt(*values: int) -> bytes:
+    """DQT segments: 8-bit table ``i`` is 64 copies of ``values[i]``."""
+    return b"".join(
+        _seg(0xDB, bytes((tq,)) + bytes([v] * 64)) for tq, v in enumerate(values)
+    )
+
+
+def _dht(*tables: tuple[int, list[int], list[int]]) -> bytes:
+    """DHT segments, one per ``(Tc << 4 | Th, code lengths, symbols)``."""
+    return b"".join(
+        _seg(0xC4, bytes((tcth,)) + bytes(lengths) + bytes(symbols))
+        for tcth, lengths, symbols in tables
+    )
+
+
+def _sof(marker: int, precision: int, width: int, height: int, comps: bytes) -> bytes:
+    """A frame header (any SOFn, or DHP, which shares its layout)."""
+    return _seg(
+        marker,
+        bytes((precision,)) + height.to_bytes(2, "big") + width.to_bytes(2, "big")
+        + comps,
+    )
+
+
+def _sos(comps: bytes, ss: int = 0, se: int = 63, ah: int = 0, al: int = 0) -> bytes:
+    """A scan header: component selectors, spectral band, approximation."""
+    return _seg(0xDA, comps + bytes((ss, se, (ah << 4) | al)))
+
+
+def _dri(interval: int) -> bytes:
+    """A restart-interval segment (units per entropy-coded segment)."""
+    return _seg(0xDD, interval.to_bytes(2, "big"))
+
+
+def _join_rst(parts: list[bytes]) -> bytes:
+    """Entropy-coded segments separated by RST0..RST7, cycling."""
+    return parts[0] + b"".join(
+        bytes((0xFF, 0xD0 + (i % 8))) + p for i, p in enumerate(parts[1:])
+    )
+
+
+def _restart_segments(units: list, ri: int) -> list[list]:
+    """``units`` split every ``ri`` (0: one segment)."""
+    return [units[i : i + ri] for i in range(0, len(units), ri)] if ri else [units]
+
+
+def _block_grid(width: int, height: int) -> list[tuple[int, int]]:
+    """The 8x8 block grid ``(bx, by)`` in raster order, padded to whole
+    blocks."""
+    return [(bx, by) for by in range((height + 7) // 8) for bx in range((width + 7) // 8)]
+
+
+def _put_diff(bw: _BitWriter, codes: dict, diff: int) -> None:
+    """Huffman-code one DC (or lossless) difference: its category's code,
+    then the low bits, negatives one's-complemented.  Category 16 (the
+    lossless 32768 escape) carries no extra bits."""
+    t = _jpeg_category(diff)
+    code, nbits = codes[t]
+    bw.write(code, nbits)
+    if 0 < t < 16:
+        bw.write(diff if diff >= 0 else diff + (1 << t) - 1, t)
+
+
+def _put_block(bw: _BitWriter, dc_codes: dict, ac_codes: dict | None,
+               diff: int, ac: int) -> None:
+    """One sequential block of the synthesizers' AC class: the DC
+    difference, then -- when ``ac`` is nonzero -- two ZRLs (zigzag 1..32
+    zero) and a run-6 symbol placing ``ac`` at zigzag 39 = (4,4), then
+    EOB.  ``ac_codes=None`` writes the DC difference alone (a
+    progressive DC scan)."""
+    _put_diff(bw, dc_codes, diff)
+    if ac_codes is None:
+        return
+    if ac:
+        zcode, znb = ac_codes[0xF0]
+        bw.write(zcode, znb)
+        bw.write(zcode, znb)
+        s = _jpeg_category(ac)
+        code, nbits = ac_codes[(6 << 4) | s]
+        bw.write(code, nbits)
+        bw.write(ac, s)  # positive: magnitude bits verbatim
+    code, nbits = ac_codes[0x00]
+    bw.write(code, nbits)
+
+
+def _huffman_scan(width: int, height: int, factors: list[tuple[int, int]],
+                  coef, tables: list, ri: int = 0) -> bytes:
+    """Entropy-code one interleaved scan of :func:`_put_block` blocks.
+    The MCU walk is T.81 A.2.3: per MCU, each component's ``h x v``
+    blocks (``factors[ci]``) in raster order, in the component's own
+    block grid, the image padded to whole MCUs.  ``coef(ci, bx, by)``
+    gives a block's (DC, zigzag-39 AC) values and ``tables[ci]`` its (DC
+    codes, AC codes or None); each component has its own DC predictor.
+    ``ri > 0`` ends a byte-aligned entropy segment every ``ri`` MCUs,
+    resetting the predictors (E.2.4)."""
+    hmax = max(h for h, _ in factors)
+    vmax = max(v for _, v in factors)
+    parts: list[bytes] = []
+    bw = _BitWriter()
+    prev = [0] * len(factors)
+    mcu = 0
+    for my in range((height + 8 * vmax - 1) // (8 * vmax)):
+        for mx in range((width + 8 * hmax - 1) // (8 * hmax)):
+            if ri and mcu and mcu % ri == 0:
+                parts.append(bw.flush())
+                bw = _BitWriter()
+                prev = [0] * len(factors)
+            for ci, (h, v) in enumerate(factors):
+                for dy in range(v):
+                    for dx in range(h):
+                        dc, ac = coef(ci, mx * h + dx, my * v + dy)
+                        _put_block(bw, *tables[ci], dc - prev[ci], ac)
+                        prev[ci] = dc
+            mcu += 1
+    parts.append(bw.flush())
+    return _join_rst(parts)
+
+
+def _eob_flush(bw: _BitWriter, ac_codes: dict, run: int) -> None:
+    """Code a pending EOB run, if any: the EOBn symbol, then the run's
+    low ``n`` bits."""
+    if not run:
+        return
+    r = run.bit_length() - 1
+    code, nbits = ac_codes[r << 4]
+    bw.write(code, nbits)
+    if r:
+        bw.write(run - (1 << r), r)
+
+
+def _eob_band_scan(values: list[int], ac_codes: dict, ri: int = 0) -> bytes:
+    """A progressive first AC scan (one component) whose band holds at
+    most one nonzero coefficient per block, at the band head: per block
+    ``values[i]`` (positive, or 0 for an all-zero band).  Zero blocks
+    extend EOB runs, a coded block starts one as its own terminator, and
+    with ``ri > 0`` every restart segment flushes its run (runs never
+    cross a boundary)."""
+    parts: list[bytes] = []
+    bw = _BitWriter()
+    pending = 0
+    for i, v in enumerate(values):
+        if ri and i and i % ri == 0:
+            _eob_flush(bw, ac_codes, pending)
+            pending = 0
+            parts.append(bw.flush())
+            bw = _BitWriter()
+        if v == 0:
+            pending += 1
+            continue
+        _eob_flush(bw, ac_codes, pending)
+        t = _jpeg_category(v)
+        code, nbits = ac_codes[t]  # (run 0 << 4) | size
+        bw.write(code, nbits)
+        bw.write(v, t)
+        pending = 1
+    _eob_flush(bw, ac_codes, pending)
+    parts.append(bw.flush())
+    return _join_rst(parts)
+
+
+def _synth_gray_const(width: int, height: int, doc_id: int, ri: int) -> bytes:
+    """:func:`synth_jpeg_gray`'s constant-block image; ``ri > 0`` adds a
+    DRI and restart segmentation."""
+
+    def coef(_ci: int, bx: int, by: int) -> tuple[int, int]:
+        # DC-only FDCT of a constant block
+        return 8 * ((31 * doc_id + 7 * bx + 13 * by) % 256 - 128), 0
+
+    tables = [(_canonical_codes(_DC_LENGTHS, _DC_SYMBOLS),
+               _canonical_codes(_AC_LENGTHS, _AC_SYMBOLS))]
+    return _jfif(
+        _dqt(1),
+        _dht((0x00, _DC_LENGTHS, _DC_SYMBOLS), (0x10, _AC_LENGTHS, _AC_SYMBOLS)),
+        _sof(0xC0, 8, width, height, _SOF_GRAY),
+        _dri(ri) if ri else b"",
+        _sos(_SOS_GRAY),
+        _huffman_scan(width, height, [(1, 1)], coef, tables, ri),
+    )
+
+
+def _synth_color(width: int, height: int, doc_id: int, mn, dc_lengths: tuple,
+                 dc_symbols: list[int], sof_marker: int, precision: int,
+                 y_sampling: int) -> bytes:
+    """The Huffman color synthesizers' shared frame: per-component block
+    class ``mn(ci, doc_id, bx, by) -> (m, n)`` coded as ``F(0,0) = 8m,
+    F(4,4) = 8n``, chroma stored HALVED against a dequant table of 2s,
+    luma/chroma DC tables at ``dc_lengths``, the run-6 AC tables, and
+    luma sampling ``y_sampling`` (chroma 1x1)."""
+
+    def coef(ci: int, bx: int, by: int) -> tuple[int, int]:
+        m, n = mn(ci, doc_id, bx, by)
+        scale = 8 if ci == 0 else 4  # chroma stored halved, q=2
+        return scale * m, scale * n
+
+    luma = (_canonical_codes(dc_lengths[0], dc_symbols),
+            _canonical_codes(_AC_RUN6_LENGTHS, _AC_RUN6_SYMBOLS))
+    chroma = (_canonical_codes(dc_lengths[1], dc_symbols),
+              _canonical_codes(_AC_RUN6_CHROMA_LENGTHS, _AC_RUN6_SYMBOLS))
+    factors = [(y_sampling >> 4, y_sampling & 0x0F), (1, 1), (1, 1)]
+    return _jfif(
+        _dqt(1, 2),
+        _dht(
+            (0x00, dc_lengths[0], dc_symbols),
+            (0x10, _AC_RUN6_LENGTHS, _AC_RUN6_SYMBOLS),
+            (0x01, dc_lengths[1], dc_symbols),
+            (0x11, _AC_RUN6_CHROMA_LENGTHS, _AC_RUN6_SYMBOLS),
+        ),
+        _sof(sof_marker, precision, width, height,
+             bytes((3, 1, y_sampling, 0)) + _SOF_COLOR[4:]),
+        _sos(_SOS_COLOR),
+        _huffman_scan(width, height, factors, coef, [luma, chroma, chroma]),
+    )
+
+
 def synth_jpeg_gray(width: int, height: int, doc_id: int) -> bytes:
     """A REAL baseline JFIF (grayscale, all-ones quant table, our own
     DHT tables, every 8x8 block a CONSTANT value
@@ -1741,40 +1954,7 @@ def synth_jpeg_gray(width: int, height: int, doc_id: int) -> bytes:
     bit-for-bit.  Non-multiple-of-8 dimensions (r15) pad to the MCU grid
     per the spec -- the decoder crops, and the per-block value formula
     makes the cropped raster the same per-pixel expression."""
-    dc_codes = _canonical_codes(_DC_LENGTHS, _DC_SYMBOLS)
-    ac_codes = _canonical_codes(_AC_LENGTHS, _AC_SYMBOLS)
-    bw = _BitWriter()
-    prev_dc = 0
-    for by in range((height + 7) // 8):
-        for bx in range((width + 7) // 8):
-            v = (31 * doc_id + 7 * bx + 13 * by) % 256
-            dc = 8 * (v - 128)  # DC-only FDCT of a constant block
-            diff = dc - prev_dc
-            prev_dc = dc
-            t = _jpeg_category(diff)
-            code, nbits = dc_codes[t]
-            bw.write(code, nbits)
-            if t:
-                bw.write(diff if diff >= 0 else diff + (1 << t) - 1, t)
-            code, nbits = ac_codes[0x00]  # EOB: all 63 ACs zero
-            bw.write(code, nbits)
-    scan = bw.flush()
-
-    def seg(marker: int, body: bytes) -> bytes:
-        return bytes((0xFF, marker)) + (len(body) + 2).to_bytes(2, "big") + body
-
-    dqt = seg(0xDB, bytes((0x00,)) + bytes([1] * 64))
-    dht = (
-        seg(0xC4, bytes((0x00,)) + bytes(_DC_LENGTHS) + bytes(_DC_SYMBOLS))
-        + seg(0xC4, bytes((0x10,)) + bytes(_AC_LENGTHS) + bytes(_AC_SYMBOLS))
-    )
-    sof0 = seg(
-        0xC0,
-        bytes((8,)) + height.to_bytes(2, "big") + width.to_bytes(2, "big")
-        + bytes((1, 1, 0x11, 0)),
-    )
-    sos = seg(0xDA, bytes((1, 1, 0x00, 0, 63, 0)))
-    return b"\xff\xd8" + dqt + dht + sof0 + sos + scan + b"\xff\xd9"
+    return _synth_gray_const(width, height, doc_id, 0)
 
 
 #: DC table for the 12-bit synthesizer: categories 0..15 (12-bit DC
@@ -1794,45 +1974,34 @@ def synth_jpeg_gray12(width: int, height: int, doc_id: int) -> bytes:
     constant block's FDCT is DC-only with the DC a multiple of 8, so the
     float IDCT is exact and the decode round-trips bit-for-bit (same
     argument as :func:`synth_jpeg_gray`)."""
-    dc_codes = _canonical_codes(_DC12_LENGTHS, _DC12_SYMBOLS)
-    ac_codes = _canonical_codes(_AC_LENGTHS, _AC_SYMBOLS)
-    bw = _BitWriter()
-    prev_dc = 0
-    for by in range((height + 7) // 8):
-        for bx in range((width + 7) // 8):
-            v = (997 * doc_id + 131 * bx + 241 * by) % 4096
-            dc = 8 * (v - 2048)
-            diff = dc - prev_dc
-            prev_dc = dc
-            t = _jpeg_category(diff)
-            code, nbits = dc_codes[t]
-            bw.write(code, nbits)
-            if t:
-                bw.write(diff if diff >= 0 else diff + (1 << t) - 1, t)
-            code, nbits = ac_codes[0x00]
-            bw.write(code, nbits)
-    scan = bw.flush()
 
-    def seg(marker: int, body: bytes) -> bytes:
-        return bytes((0xFF, marker)) + (len(body) + 2).to_bytes(2, "big") + body
+    def coef(_ci: int, bx: int, by: int) -> tuple[int, int]:
+        return 8 * ((997 * doc_id + 131 * bx + 241 * by) % 4096 - 2048), 0
 
-    dqt = seg(0xDB, bytes((0x00,)) + bytes([1] * 64))
-    dht = (
-        seg(0xC4, bytes((0x00,)) + bytes(_DC12_LENGTHS) + bytes(_DC12_SYMBOLS))
-        + seg(0xC4, bytes((0x10,)) + bytes(_AC_LENGTHS) + bytes(_AC_SYMBOLS))
+    tables = [(_canonical_codes(_DC12_LENGTHS, _DC12_SYMBOLS),
+               _canonical_codes(_AC_LENGTHS, _AC_SYMBOLS))]
+    return _jfif(
+        _dqt(1),
+        _dht((0x00, _DC12_LENGTHS, _DC12_SYMBOLS), (0x10, _AC_LENGTHS, _AC_SYMBOLS)),
+        _sof(0xC1, 12, width, height, _SOF_GRAY),
+        _sos(_SOS_GRAY),
+        _huffman_scan(width, height, [(1, 1)], coef, tables),
     )
-    sof1 = seg(
-        0xC1,
-        bytes((12,)) + height.to_bytes(2, "big") + width.to_bytes(2, "big")
-        + bytes((1, 1, 0x11, 0)),
-    )
-    sos = seg(0xDA, bytes((1, 1, 0x00, 0, 63, 0)))
-    return b"\xff\xd8" + dqt + dht + sof1 + sos + scan + b"\xff\xd9"
 
 
 #: 12-bit chroma DC table: the 16 diff categories at length 6 (vs the
 #: luma table's length 5), so a wrong-table pick desynchronizes loudly.
 _DC12_CHROMA_LENGTHS = [0, 0, 0, 0, 0, 16, 0, 0, 0, 0, 0, 0, 0, 0, 0, 0]
+
+
+def _color12_block_mn(ci: int, doc_id: int, bx: int, by: int) -> tuple[int, int]:
+    """Per-component (m, n) block formulas of :func:`synth_jpeg_color12`."""
+    d = doc_id
+    if ci == 0:
+        return (331 * d + 17 * bx + 29 * by) % 3001 - 1500, (7 * d + 3 * bx + by) % 27
+    if ci == 1:
+        return (431 * d + 23 * bx + 41 * by) % 2001 - 1000, (11 * d + bx + 5 * by) % 23
+    return (523 * d + 31 * bx + 37 * by) % 2001 - 1000, (5 * d + 9 * bx + by) % 23
 
 
 def synth_jpeg_color12(width: int, height: int, doc_id: int) -> bytes:
@@ -1857,79 +2026,9 @@ def synth_jpeg_color12(width: int, height: int, doc_id: int) -> bytes:
     stored HALVED against a dequant of 2s.  Luma DC diffs reach
     category 15 (the 12-bit extension the gray gate pinned), chroma
     category 13 under the independent per-component predictors."""
-    dc_y = _canonical_codes(_DC12_LENGTHS, _DC12_SYMBOLS)
-    ac_y = _canonical_codes(_AC_RUN6_LENGTHS, _AC_RUN6_SYMBOLS)
-    dc_c = _canonical_codes(_DC12_CHROMA_LENGTHS, _DC12_SYMBOLS)
-    ac_c = _canonical_codes(_AC_RUN6_CHROMA_LENGTHS, _AC_RUN6_SYMBOLS)
-
-    def mn(ci: int, bx: int, by: int) -> tuple[int, int]:
-        d = doc_id
-        if ci == 0:
-            return (
-                (331 * d + 17 * bx + 29 * by) % 3001 - 1500,
-                (7 * d + 3 * bx + by) % 27,
-            )
-        if ci == 1:
-            return (
-                (431 * d + 23 * bx + 41 * by) % 2001 - 1000,
-                (11 * d + bx + 5 * by) % 23,
-            )
-        return (
-            (523 * d + 31 * bx + 37 * by) % 2001 - 1000,
-            (5 * d + 9 * bx + by) % 23,
-        )
-
-    bw = _BitWriter()
-    prev = [0, 0, 0]
-    for by in range((height + 7) // 8):
-        for bx in range((width + 7) // 8):
-            for ci in range(3):
-                dc_codes, ac_codes = (dc_y, ac_y) if ci == 0 else (dc_c, ac_c)
-                scale = 8 if ci == 0 else 4  # chroma stored halved, q=2
-                m, n = mn(ci, bx, by)
-                dc = scale * m
-                diff = dc - prev[ci]
-                prev[ci] = dc
-                t = _jpeg_category(diff)
-                code, nbits = dc_codes[t]
-                bw.write(code, nbits)
-                if t:
-                    bw.write(diff if diff >= 0 else diff + (1 << t) - 1, t)
-                if n:
-                    zcode, znb = ac_codes[0xF0]
-                    bw.write(zcode, znb)
-                    bw.write(zcode, znb)
-                    ac = scale * n
-                    s = _jpeg_category(ac)
-                    code, nbits = ac_codes[(6 << 4) | s]
-                    bw.write(code, nbits)
-                    bw.write(ac, s)
-                code, nbits = ac_codes[0x00]
-                bw.write(code, nbits)
-    scan = bw.flush()
-
-    def seg(marker: int, body: bytes) -> bytes:
-        return bytes((0xFF, marker)) + (len(body) + 2).to_bytes(2, "big") + body
-
-    dqt = seg(0xDB, bytes((0x00,)) + bytes([1] * 64)) + seg(
-        0xDB, bytes((0x01,)) + bytes([2] * 64)
-    )
-    dht = (
-        seg(0xC4, bytes((0x00,)) + bytes(_DC12_LENGTHS) + bytes(_DC12_SYMBOLS))
-        + seg(0xC4, bytes((0x10,)) + bytes(_AC_RUN6_LENGTHS) + bytes(_AC_RUN6_SYMBOLS))
-        + seg(0xC4, bytes((0x01,)) + bytes(_DC12_CHROMA_LENGTHS) + bytes(_DC12_SYMBOLS))
-        + seg(
-            0xC4,
-            bytes((0x11,)) + bytes(_AC_RUN6_CHROMA_LENGTHS) + bytes(_AC_RUN6_SYMBOLS),
-        )
-    )
-    sof1 = seg(
-        0xC1,
-        bytes((12,)) + height.to_bytes(2, "big") + width.to_bytes(2, "big")
-        + bytes((3, 1, 0x11, 0, 2, 0x11, 1, 3, 0x11, 1)),
-    )
-    sos = seg(0xDA, bytes((3, 1, 0x00, 2, 0x11, 3, 0x11, 0, 63, 0)))
-    return b"\xff\xd8" + dqt + dht + sof1 + sos + scan + b"\xff\xd9"
+    return _synth_color(width, height, doc_id, _color12_block_mn,
+                        (_DC12_LENGTHS, _DC12_CHROMA_LENGTHS), _DC12_SYMBOLS,
+                        0xC1, 12, 0x11)
 
 
 def synth_jpeg_gray_restart(
@@ -1948,53 +2047,7 @@ def synth_jpeg_gray_restart(
     ri = interval if interval is not None else doc_id % 4 + 1
     if ri <= 0:
         raise ValueError("restart interval must be positive")
-    dc_codes = _canonical_codes(_DC_LENGTHS, _DC_SYMBOLS)
-    ac_codes = _canonical_codes(_AC_LENGTHS, _AC_SYMBOLS)
-    segments: list[bytes] = []
-    bw = _BitWriter()
-    prev_dc = 0
-    count = 0
-    for by in range((height + 7) // 8):
-        for bx in range((width + 7) // 8):
-            if count and count % ri == 0:
-                segments.append(bw.flush())
-                bw = _BitWriter()
-                prev_dc = 0
-            v = (31 * doc_id + 7 * bx + 13 * by) % 256
-            dc = 8 * (v - 128)
-            diff = dc - prev_dc
-            prev_dc = dc
-            t = _jpeg_category(diff)
-            code, nbits = dc_codes[t]
-            bw.write(code, nbits)
-            if t:
-                bw.write(diff if diff >= 0 else diff + (1 << t) - 1, t)
-            code, nbits = ac_codes[0x00]
-            bw.write(code, nbits)
-            count += 1
-    segments.append(bw.flush())
-    scan = bytearray()
-    for i, segdata in enumerate(segments):
-        scan += segdata
-        if i < len(segments) - 1:
-            scan += bytes((0xFF, 0xD0 + (i % 8)))
-
-    def seg(marker: int, body: bytes) -> bytes:
-        return bytes((0xFF, marker)) + (len(body) + 2).to_bytes(2, "big") + body
-
-    dqt = seg(0xDB, bytes((0x00,)) + bytes([1] * 64))
-    dht = (
-        seg(0xC4, bytes((0x00,)) + bytes(_DC_LENGTHS) + bytes(_DC_SYMBOLS))
-        + seg(0xC4, bytes((0x10,)) + bytes(_AC_LENGTHS) + bytes(_AC_SYMBOLS))
-    )
-    sof0 = seg(
-        0xC0,
-        bytes((8,)) + height.to_bytes(2, "big") + width.to_bytes(2, "big")
-        + bytes((1, 1, 0x11, 0)),
-    )
-    dri = seg(0xDD, ri.to_bytes(2, "big"))
-    sos = seg(0xDA, bytes((1, 1, 0x00, 0, 63, 0)))
-    return b"\xff\xd8" + dqt + dht + sof0 + dri + sos + bytes(scan) + b"\xff\xd9"
+    return _synth_gray_const(width, height, doc_id, ri)
 
 
 #: AC table for the AC-bearing synthesizer: EOB, ZRL, and run-6 symbols
@@ -2028,55 +2081,21 @@ def synth_jpeg_gray_ac(width: int, height: int, doc_id: int) -> bytes:
     path honest.  Non-multiple-of-8 dimensions (r15) pad to the MCU grid
     per the spec; the decoder crops, and each cropped pixel keeps the
     same closed form ``128 + m(x//8, y//8) + n(x//8, y//8)*s(x)*s(y)``."""
-    dc_codes = _canonical_codes(_DC_LENGTHS, _DC_SYMBOLS)
-    ac_codes = _canonical_codes(_AC_RUN6_LENGTHS, _AC_RUN6_SYMBOLS)
-    bw = _BitWriter()
-    prev_dc = 0
-    for by in range((height + 7) // 8):
-        for bx in range((width + 7) // 8):
-            m = (17 * doc_id + 5 * bx + 11 * by) % 129 - 64
-            n = (7 * doc_id + 3 * bx + by) % 27
-            dc = 8 * m
-            diff = dc - prev_dc
-            prev_dc = dc
-            t = _jpeg_category(diff)
-            code, nbits = dc_codes[t]
-            bw.write(code, nbits)
-            if t:
-                bw.write(diff if diff >= 0 else diff + (1 << t) - 1, t)
-            if n:
-                # zigzag indices 1..38 are zero: ZRL skips 16 twice
-                # (k 1->17->33), the run-6 symbol lands on index 39 = (4,4)
-                zcode, znb = ac_codes[0xF0]
-                bw.write(zcode, znb)
-                bw.write(zcode, znb)
-                ac = 8 * n
-                s = _jpeg_category(ac)
-                code, nbits = ac_codes[(6 << 4) | s]
-                bw.write(code, nbits)
-                bw.write(ac, s)  # positive: magnitude bits verbatim
-            code, nbits = ac_codes[0x00]  # EOB for the rest of the block
-            bw.write(code, nbits)
-    scan = bw.flush()
 
-    def seg(marker: int, body: bytes) -> bytes:
-        return bytes((0xFF, marker)) + (len(body) + 2).to_bytes(2, "big") + body
+    def coef(_ci: int, bx: int, by: int) -> tuple[int, int]:
+        m, n = _color_block_mn(0, doc_id, bx, by)  # the luma class
+        return 8 * m, 8 * n
 
-    dqt = seg(0xDB, bytes((0x00,)) + bytes([1] * 64))
-    dht = (
-        seg(0xC4, bytes((0x00,)) + bytes(_DC_LENGTHS) + bytes(_DC_SYMBOLS))
-        + seg(
-            0xC4,
-            bytes((0x10,)) + bytes(_AC_RUN6_LENGTHS) + bytes(_AC_RUN6_SYMBOLS),
-        )
+    tables = [(_canonical_codes(_DC_LENGTHS, _DC_SYMBOLS),
+               _canonical_codes(_AC_RUN6_LENGTHS, _AC_RUN6_SYMBOLS))]
+    return _jfif(
+        _dqt(1),
+        _dht((0x00, _DC_LENGTHS, _DC_SYMBOLS),
+             (0x10, _AC_RUN6_LENGTHS, _AC_RUN6_SYMBOLS)),
+        _sof(0xC0, 8, width, height, _SOF_GRAY),
+        _sos(_SOS_GRAY),
+        _huffman_scan(width, height, [(1, 1)], coef, tables),
     )
-    sof0 = seg(
-        0xC0,
-        bytes((8,)) + height.to_bytes(2, "big") + width.to_bytes(2, "big")
-        + bytes((1, 1, 0x11, 0)),
-    )
-    sos = seg(0xDA, bytes((1, 1, 0x00, 0, 63, 0)))
-    return b"\xff\xd8" + dqt + dht + sof0 + sos + scan + b"\xff\xd9"
 
 
 #: chroma-side tables for the color synthesizer, at DIFFERENT code
@@ -2107,70 +2126,9 @@ def synth_jpeg_color(width: int, height: int, doc_id: int) -> bytes:
     share tables but carry independent DC predictors, exercising the
     spec's per-component PRED."""
     # non-multiple-of-8 dims (r15) pad to the MCU grid; the decoder crops
-    dc_y = _canonical_codes(_DC_LENGTHS, _DC_SYMBOLS)
-    ac_y = _canonical_codes(_AC_RUN6_LENGTHS, _AC_RUN6_SYMBOLS)
-    dc_c = _canonical_codes(_DC_CHROMA_LENGTHS, _DC_SYMBOLS)
-    ac_c = _canonical_codes(_AC_RUN6_CHROMA_LENGTHS, _AC_RUN6_SYMBOLS)
-
-    def mn(ci: int, bx: int, by: int) -> tuple[int, int]:
-        d = doc_id
-        if ci == 0:
-            return (17 * d + 5 * bx + 11 * by) % 129 - 64, (7 * d + 3 * bx + by) % 27
-        if ci == 1:
-            return (13 * d + 7 * bx + 3 * by) % 101 - 50, (11 * d + bx + 5 * by) % 23
-        return (19 * d + 3 * bx + 7 * by) % 101 - 50, (5 * d + 9 * bx + by) % 23
-
-    bw = _BitWriter()
-    prev = [0, 0, 0]
-    for by in range((height + 7) // 8):
-        for bx in range((width + 7) // 8):
-            for ci in range(3):
-                dc_codes, ac_codes = (dc_y, ac_y) if ci == 0 else (dc_c, ac_c)
-                scale = 8 if ci == 0 else 4  # chroma stored halved, q=2
-                m, n = mn(ci, bx, by)
-                dc = scale * m
-                diff = dc - prev[ci]
-                prev[ci] = dc
-                t = _jpeg_category(diff)
-                code, nbits = dc_codes[t]
-                bw.write(code, nbits)
-                if t:
-                    bw.write(diff if diff >= 0 else diff + (1 << t) - 1, t)
-                if n:
-                    zcode, znb = ac_codes[0xF0]
-                    bw.write(zcode, znb)
-                    bw.write(zcode, znb)
-                    ac = scale * n
-                    s = _jpeg_category(ac)
-                    code, nbits = ac_codes[(6 << 4) | s]
-                    bw.write(code, nbits)
-                    bw.write(ac, s)
-                code, nbits = ac_codes[0x00]
-                bw.write(code, nbits)
-    scan = bw.flush()
-
-    def seg(marker: int, body: bytes) -> bytes:
-        return bytes((0xFF, marker)) + (len(body) + 2).to_bytes(2, "big") + body
-
-    dqt = seg(0xDB, bytes((0x00,)) + bytes([1] * 64)) + seg(
-        0xDB, bytes((0x01,)) + bytes([2] * 64)
-    )
-    dht = (
-        seg(0xC4, bytes((0x00,)) + bytes(_DC_LENGTHS) + bytes(_DC_SYMBOLS))
-        + seg(0xC4, bytes((0x10,)) + bytes(_AC_RUN6_LENGTHS) + bytes(_AC_RUN6_SYMBOLS))
-        + seg(0xC4, bytes((0x01,)) + bytes(_DC_CHROMA_LENGTHS) + bytes(_DC_SYMBOLS))
-        + seg(
-            0xC4,
-            bytes((0x11,)) + bytes(_AC_RUN6_CHROMA_LENGTHS) + bytes(_AC_RUN6_SYMBOLS),
-        )
-    )
-    sof0 = seg(
-        0xC0,
-        bytes((8,)) + height.to_bytes(2, "big") + width.to_bytes(2, "big")
-        + bytes((3, 1, 0x11, 0, 2, 0x11, 1, 3, 0x11, 1)),
-    )
-    sos = seg(0xDA, bytes((3, 1, 0x00, 2, 0x11, 3, 0x11, 0, 63, 0)))
-    return b"\xff\xd8" + dqt + dht + sof0 + sos + scan + b"\xff\xd9"
+    return _synth_color(width, height, doc_id, _color_block_mn,
+                        (_DC_LENGTHS, _DC_CHROMA_LENGTHS), _DC_SYMBOLS,
+                        0xC0, 8, 0x11)
 
 
 #: AC tables for the progressive synthesizer: EOBn run symbols (r<<4 for
@@ -2197,88 +2155,42 @@ def synth_jpeg_progressive(width: int, height: int, doc_id: int) -> bytes:
     grids)."""
     dc_y = _canonical_codes(_DC_LENGTHS, _DC_SYMBOLS)
     dc_c = _canonical_codes(_DC_CHROMA_LENGTHS, _DC_SYMBOLS)
-    ac_y = _canonical_codes(_AC_PROG_LENGTHS, _AC_PROG_SYMBOLS)
-    ac_c = _canonical_codes(_AC_PROG_CHROMA_LENGTHS, _AC_PROG_SYMBOLS)
-    bh, bwid = (height + 7) // 8, (width + 7) // 8
+    ac_tabs = (_canonical_codes(_AC_PROG_LENGTHS, _AC_PROG_SYMBOLS),
+               _canonical_codes(_AC_PROG_CHROMA_LENGTHS, _AC_PROG_SYMBOLS))
 
-    def seg(marker: int, body: bytes) -> bytes:
-        return bytes((0xFF, marker)) + (len(body) + 2).to_bytes(2, "big") + body
-
-    # scan 1: interleaved DC (decoder order: MCU raster, components inner)
-    bw = _BitWriter()
-    prev = [0, 0, 0]
-    for by in range(bh):
-        for bx in range(bwid):
-            for ci in range(3):
-                dc_codes = dc_y if ci == 0 else dc_c
-                scale = 8 if ci == 0 else 4
-                m, _n = _color_block_mn(ci, doc_id, bx, by)
-                dc = scale * m
-                diff = dc - prev[ci]
-                prev[ci] = dc
-                t = _jpeg_category(diff)
-                code, nbits = dc_codes[t]
-                bw.write(code, nbits)
-                if t:
-                    bw.write(diff if diff >= 0 else diff + (1 << t) - 1, t)
-    dc_scan = seg(0xDA, bytes((3, 1, 0x00, 2, 0x10, 3, 0x10, 0, 0, 0))) + bw.flush()
-
-    def eob_flush(bw: _BitWriter, ac_codes, run: int) -> None:
-        if not run:
-            return
-        r = run.bit_length() - 1
-        code, nbits = ac_codes[(r << 4) | 0]
-        bw.write(code, nbits)
-        if r:
-            bw.write(run - (1 << r), r)
-
-    ac_scans = b""
-    for ci in range(3):
-        ac_codes = ac_y if ci == 0 else ac_c
-        ac_id = 0 if ci == 0 else 1
+    def coef(ci: int, bx: int, by: int) -> tuple[int, int]:
+        m, n = _color_block_mn(ci, doc_id, bx, by)
         scale = 8 if ci == 0 else 4
-        cid = ci + 1
-        # band 1..38: every block all-zero -> one EOBn covers the grid
-        bw = _BitWriter()
-        eob_flush(bw, ac_codes, bh * bwid)
-        ac_scans += seg(0xDA, bytes((1, cid, ac_id, 1, 38, 0))) + bw.flush()
-        # band 39..63: run-0 coefficient at 39, EOBRUN terminators
-        bw = _BitWriter()
-        pending = 0
-        for by in range(bh):
-            for bx in range(bwid):
-                _m, n = _color_block_mn(ci, doc_id, bx, by)
-                if n == 0:
-                    pending += 1
-                    continue
-                eob_flush(bw, ac_codes, pending)
-                ac = scale * n
-                s = _jpeg_category(ac)
-                code, nbits = ac_codes[s]  # (0 << 4) | s
-                bw.write(code, nbits)
-                bw.write(ac, s)
-                pending = 1  # this block's terminator, extendable
-        eob_flush(bw, ac_codes, pending)
-        ac_scans += seg(0xDA, bytes((1, cid, ac_id, 39, 63, 0))) + bw.flush()
+        return scale * m, scale * n
 
-    dqt = seg(0xDB, bytes((0x00,)) + bytes([1] * 64)) + seg(
-        0xDB, bytes((0x01,)) + bytes([2] * 64)
+    grid = _block_grid(width, height)
+    # scan 1: interleaved DC (decoder order: MCU raster, components inner)
+    scans = [
+        _sos(bytes((3, 1, 0x00, 2, 0x10, 3, 0x10)), 0, 0),
+        _huffman_scan(width, height, [(1, 1)] * 3, coef,
+                      [(dc_y, None), (dc_c, None), (dc_c, None)]),
+    ]
+    for ci in range(3):
+        ac_id = min(ci, 1)
+        sel = bytes((1, ci + 1, ac_id))
+        # band 1..38: every block all-zero -> one EOBn covers the grid;
+        # band 39..63: run-0 coefficient at 39, EOBRUN terminators
+        scans += [
+            _sos(sel, 1, 38), _eob_band_scan([0] * len(grid), ac_tabs[ac_id]),
+            _sos(sel, 39, 63),
+            _eob_band_scan([coef(ci, bx, by)[1] for bx, by in grid], ac_tabs[ac_id]),
+        ]
+    return _jfif(
+        _dqt(1, 2),
+        _dht(
+            (0x00, _DC_LENGTHS, _DC_SYMBOLS),
+            (0x10, _AC_PROG_LENGTHS, _AC_PROG_SYMBOLS),
+            (0x01, _DC_CHROMA_LENGTHS, _DC_SYMBOLS),
+            (0x11, _AC_PROG_CHROMA_LENGTHS, _AC_PROG_SYMBOLS),
+        ),
+        _sof(0xC2, 8, width, height, _SOF_COLOR),
+        *scans,
     )
-    dht = (
-        seg(0xC4, bytes((0x00,)) + bytes(_DC_LENGTHS) + bytes(_DC_SYMBOLS))
-        + seg(0xC4, bytes((0x10,)) + bytes(_AC_PROG_LENGTHS) + bytes(_AC_PROG_SYMBOLS))
-        + seg(0xC4, bytes((0x01,)) + bytes(_DC_CHROMA_LENGTHS) + bytes(_DC_SYMBOLS))
-        + seg(
-            0xC4,
-            bytes((0x11,)) + bytes(_AC_PROG_CHROMA_LENGTHS) + bytes(_AC_PROG_SYMBOLS),
-        )
-    )
-    sof2 = seg(
-        0xC2,
-        bytes((8,)) + height.to_bytes(2, "big") + width.to_bytes(2, "big")
-        + bytes((3, 1, 0x11, 0, 2, 0x11, 1, 3, 0x11, 1)),
-    )
-    return b"\xff\xd8" + dqt + dht + sof2 + dc_scan + ac_scans + b"\xff\xd9"
 
 
 def _refined_block_mn(doc_id: int, bx: int, by: int) -> tuple[int, int]:
@@ -2313,66 +2225,16 @@ def synth_jpeg_progressive_refined(width: int, height: int, doc_id: int) -> byte
     39..63 refinement (corrections + new coefficients + EOB runs)."""
     dc_y = _canonical_codes(_DC_LENGTHS, _DC_SYMBOLS)
     ac_y = _canonical_codes(_AC_PROG_LENGTHS, _AC_PROG_SYMBOLS)
-    bh, bwid = (height + 7) // 8, (width + 7) // 8
+    grid = _block_grid(width, height)
+    ns = [_refined_block_mn(doc_id, bx, by)[1] for bx, by in grid]
 
-    def seg(marker: int, body: bytes) -> bytes:
-        return bytes((0xFF, marker)) + (len(body) + 2).to_bytes(2, "big") + body
+    def dc_half(_ci: int, bx: int, by: int) -> tuple[int, int]:
+        return _refined_block_mn(doc_id, bx, by)[0] >> 1, 0  # floor; m odd
 
-    def eob_flush(bw: _BitWriter, run: int) -> None:
-        if not run:
-            return
-        r = run.bit_length() - 1
-        code, nbits = ac_y[(r << 4) | 0]
-        bw.write(code, nbits)
-        if r:
-            bw.write(run - (1 << r), r)
-
-    # scan 1: DC first at Al=1 -- diffs of m >> 1 (floor; m odd)
-    bw = _BitWriter()
-    prev = 0
-    for by in range(bh):
-        for bx in range(bwid):
-            m, _n = _refined_block_mn(doc_id, bx, by)
-            half = m >> 1
-            diff = half - prev
-            prev = half
-            t = _jpeg_category(diff)
-            code, nbits = dc_y[t]
-            bw.write(code, nbits)
-            if t:
-                bw.write(diff if diff >= 0 else diff + (1 << t) - 1, t)
-    scans = seg(0xDA, bytes((1, 1, 0x00, 0, 0, 0x01))) + bw.flush()
     # scan 2: DC refinement -- one raw bit per block, all 1 (m odd)
-    bw = _BitWriter()
-    for _ in range(bh * bwid):
-        bw.write(1, 1)
-    scans += seg(0xDA, bytes((1, 1, 0x00, 0, 0, 0x10))) + bw.flush()
-    # scan 3: AC band 1..38 first at Al=1 -- all zero, one EOBn
-    bw = _BitWriter()
-    eob_flush(bw, bh * bwid)
-    scans += seg(0xDA, bytes((1, 1, 0x00, 1, 38, 0x01))) + bw.flush()
-    # scan 4: AC band 39..63 first at Al=1 -- halves; n <= 1 rides EOBn
-    bw = _BitWriter()
-    pending = 0
-    for by in range(bh):
-        for bx in range(bwid):
-            _m, n = _refined_block_mn(doc_id, bx, by)
-            if n < 3:
-                pending += 1
-                continue
-            eob_flush(bw, pending)
-            half = n >> 1
-            t = _jpeg_category(half)
-            code, nbits = ac_y[t]
-            bw.write(code, nbits)
-            bw.write(half, t)
-            pending = 1
-    eob_flush(bw, pending)
-    scans += seg(0xDA, bytes((1, 1, 0x00, 39, 63, 0x01))) + bw.flush()
-    # scan 5: AC band 1..38 refinement -- no history, no new -> EOBn only
-    bw = _BitWriter()
-    eob_flush(bw, bh * bwid)
-    scans += seg(0xDA, bytes((1, 1, 0x00, 1, 38, 0x10))) + bw.flush()
+    dc_bits = _BitWriter()
+    for _ in grid:
+        dc_bits.write(1, 1)
     # scan 6: AC band 39..63 refinement.  Bit layout mirrors the decoder:
     # an EOBn code, then the covered blocks' correction bits in block
     # order (one bit per nonzero-history coefficient); a block that
@@ -2382,39 +2244,42 @@ def synth_jpeg_progressive_refined(width: int, height: int, doc_id: int) -> byte
     bw = _BitWriter()
     pending = 0
     pend_bits: list[int] = []
-    for by in range(bh):
-        for bx in range(bwid):
-            _m, n = _refined_block_mn(doc_id, bx, by)
-            if n >= 3:
-                pending += 1
-                pend_bits.append(1)  # correction bit: n odd, history even
-            elif n == 0:
-                pending += 1  # no nonzero history: no correction bit
-            else:  # n == 1: newly nonzero coefficient
-                eob_flush(bw, pending)
-                for b in pend_bits:
-                    bw.write(b, 1)
-                pend_bits = []
-                code, nbits = ac_y[0x01]  # run 0, size 1
-                bw.write(code, nbits)
-                bw.write(1, 1)  # sign: positive -> +(1 << Al)
-                pending = 1  # this block's own EOB terminator
-    eob_flush(bw, pending)
+    for n in ns:
+        if n >= 3:
+            pending += 1
+            pend_bits.append(1)  # correction bit: n odd, history even
+        elif n == 0:
+            pending += 1  # no nonzero history: no correction bit
+        else:  # n == 1: newly nonzero coefficient
+            _eob_flush(bw, ac_y, pending)
+            for b in pend_bits:
+                bw.write(b, 1)
+            pend_bits = []
+            code, nbits = ac_y[0x01]  # run 0, size 1
+            bw.write(code, nbits)
+            bw.write(1, 1)  # sign: positive -> +(1 << Al)
+            pending = 1  # this block's own EOB terminator
+    _eob_flush(bw, ac_y, pending)
     for b in pend_bits:
         bw.write(b, 1)
-    scans += seg(0xDA, bytes((1, 1, 0x00, 39, 63, 0x10))) + bw.flush()
 
-    dqt = seg(0xDB, bytes((0x00,)) + bytes([8] * 64))
-    dht = (
-        seg(0xC4, bytes((0x00,)) + bytes(_DC_LENGTHS) + bytes(_DC_SYMBOLS))
-        + seg(0xC4, bytes((0x10,)) + bytes(_AC_PROG_LENGTHS) + bytes(_AC_PROG_SYMBOLS))
+    return _jfif(
+        _dqt(8),
+        _dht((0x00, _DC_LENGTHS, _DC_SYMBOLS),
+             (0x10, _AC_PROG_LENGTHS, _AC_PROG_SYMBOLS)),
+        _sof(0xC2, 8, width, height, _SOF_GRAY),
+        # scan 1: DC first at Al=1 -- diffs of m >> 1
+        _sos(_SOS_GRAY, 0, 0, 0, 1),
+        _huffman_scan(width, height, [(1, 1)], dc_half, [(dc_y, None)]),
+        _sos(_SOS_GRAY, 0, 0, 1, 0), dc_bits.flush(),
+        # scan 3: AC band 1..38 first at Al=1 -- all zero, one EOBn
+        _sos(_SOS_GRAY, 1, 38, 0, 1), _eob_band_scan([0] * len(grid), ac_y),
+        # scan 4: AC band 39..63 first at Al=1 -- halves; n <= 1 rides EOBn
+        _sos(_SOS_GRAY, 39, 63, 0, 1), _eob_band_scan([n >> 1 for n in ns], ac_y),
+        # scan 5: AC band 1..38 refinement -- no history, no new -> EOBn only
+        _sos(_SOS_GRAY, 1, 38, 1, 0), _eob_band_scan([0] * len(grid), ac_y),
+        _sos(_SOS_GRAY, 39, 63, 1, 0), bw.flush(),
     )
-    sof2 = seg(
-        0xC2,
-        bytes((8,)) + height.to_bytes(2, "big") + width.to_bytes(2, "big")
-        + bytes((1, 1, 0x11, 0)),
-    )
-    return b"\xff\xd8" + dqt + dht + sof2 + scans + b"\xff\xd9"
 
 
 def synth_jpeg_progressive_restart(
@@ -2440,98 +2305,26 @@ def synth_jpeg_progressive_restart(
         raise ValueError("restart interval must be positive")
     dc_y = _canonical_codes(_DC_LENGTHS, _DC_SYMBOLS)
     ac_y = _canonical_codes(_AC_PROG_LENGTHS, _AC_PROG_SYMBOLS)
-    bh, bwid = (height + 7) // 8, (width + 7) // 8
-    nblk = bh * bwid
+    blocks = [_refined_block_mn(doc_id, bx, by) for bx, by in _block_grid(width, height)]
 
-    def seg(marker: int, body: bytes) -> bytes:
-        return bytes((0xFF, marker)) + (len(body) + 2).to_bytes(2, "big") + body
+    def dc(_ci: int, bx: int, by: int) -> tuple[int, int]:
+        return _refined_block_mn(doc_id, bx, by)[0], 0
 
-    def eob_flush(bw: _BitWriter, run: int) -> None:
-        if not run:
-            return
-        r = run.bit_length() - 1
-        code, nbits = ac_y[(r << 4) | 0]
-        bw.write(code, nbits)
-        if r:
-            bw.write(run - (1 << r), r)
-
-    def join_segments(parts: list[bytes]) -> bytes:
-        out = bytearray()
-        for i, p in enumerate(parts):
-            out += p
-            if i < len(parts) - 1:
-                out += bytes((0xFF, 0xD0 + (i % 8)))
-        return bytes(out)
-
-    blocks = [
-        _refined_block_mn(doc_id, bx, by)
-        for by in range(bh)
-        for bx in range(bwid)
-    ]
-
-    # scan 1: DC first (Al=0) -- per-segment predictor reset
-    parts: list[bytes] = []
-    bw = _BitWriter()
-    prev = 0
-    for i, (m, _n) in enumerate(blocks):
-        if i and i % ri == 0:
-            parts.append(bw.flush())
-            bw = _BitWriter()
-            prev = 0
-        diff = m - prev
-        prev = m
-        t = _jpeg_category(diff)
-        code, nbits = dc_y[t]
-        bw.write(code, nbits)
-        if t:
-            bw.write(diff if diff >= 0 else diff + (1 << t) - 1, t)
-    parts.append(bw.flush())
-    scans = seg(0xDA, bytes((1, 1, 0x00, 0, 0, 0x00))) + join_segments(parts)
-
-    # scan 2: AC band 1..38 first -- all zero; one EOBn PER SEGMENT
-    parts = []
-    for lo in range(0, nblk, ri):
-        bw = _BitWriter()
-        eob_flush(bw, min(ri, nblk - lo))
-        parts.append(bw.flush())
-    scans += seg(0xDA, bytes((1, 1, 0x00, 1, 38, 0x00))) + join_segments(parts)
-
-    # scan 3: AC band 39..63 first -- n at the band head; EOB runs flushed
-    # at every segment boundary (never crossing one)
-    parts = []
-    bw = _BitWriter()
-    pending = 0
-    for i, (_m, n) in enumerate(blocks):
-        if i and i % ri == 0:
-            eob_flush(bw, pending)
-            pending = 0
-            parts.append(bw.flush())
-            bw = _BitWriter()
-        if n == 0:
-            pending += 1
-            continue
-        eob_flush(bw, pending)
-        t = _jpeg_category(n)
-        code, nbits = ac_y[t]
-        bw.write(code, nbits)
-        bw.write(n, t)
-        pending = 1  # EOB terminator for the rest of this block's band
-    eob_flush(bw, pending)
-    parts.append(bw.flush())
-    scans += seg(0xDA, bytes((1, 1, 0x00, 39, 63, 0x00))) + join_segments(parts)
-
-    dqt = seg(0xDB, bytes((0x00,)) + bytes([8] * 64))
-    dht = (
-        seg(0xC4, bytes((0x00,)) + bytes(_DC_LENGTHS) + bytes(_DC_SYMBOLS))
-        + seg(0xC4, bytes((0x10,)) + bytes(_AC_PROG_LENGTHS) + bytes(_AC_PROG_SYMBOLS))
+    return _jfif(
+        _dqt(8),
+        _dht((0x00, _DC_LENGTHS, _DC_SYMBOLS),
+             (0x10, _AC_PROG_LENGTHS, _AC_PROG_SYMBOLS)),
+        _sof(0xC2, 8, width, height, _SOF_GRAY),
+        _dri(ri),
+        # scan 1: DC first (Al=0) -- per-segment predictor reset
+        _sos(_SOS_GRAY, 0, 0),
+        _huffman_scan(width, height, [(1, 1)], dc, [(dc_y, None)], ri),
+        # scan 2: AC band 1..38 first -- all zero; one EOBn PER SEGMENT
+        _sos(_SOS_GRAY, 1, 38), _eob_band_scan([0] * len(blocks), ac_y, ri),
+        # scan 3: AC band 39..63 first -- n at the band head; EOB runs
+        # flushed at every segment boundary (never crossing one)
+        _sos(_SOS_GRAY, 39, 63), _eob_band_scan([n for _m, n in blocks], ac_y, ri),
     )
-    sof2 = seg(
-        0xC2,
-        bytes((8,)) + height.to_bytes(2, "big") + width.to_bytes(2, "big")
-        + bytes((1, 1, 0x11, 0)),
-    )
-    dri = seg(0xDD, ri.to_bytes(2, "big"))
-    return b"\xff\xd8" + dqt + dht + sof2 + dri + scans + b"\xff\xd9"
 
 
 def _color_block_mn(ci: int, doc_id: int, bx: int, by: int) -> tuple[int, int]:
@@ -2560,69 +2353,9 @@ def synth_jpeg_color_420(width: int, height: int, doc_id: int) -> bytes:
     must be multiples of 16 (no partial MCUs)."""
     # non-multiple-of-16 dims (r15) pad to the 16x16 MCU grid; the
     # decoder crops
-    dc_y = _canonical_codes(_DC_LENGTHS, _DC_SYMBOLS)
-    ac_y = _canonical_codes(_AC_RUN6_LENGTHS, _AC_RUN6_SYMBOLS)
-    dc_c = _canonical_codes(_DC_CHROMA_LENGTHS, _DC_SYMBOLS)
-    ac_c = _canonical_codes(_AC_RUN6_CHROMA_LENGTHS, _AC_RUN6_SYMBOLS)
-
-    bw = _BitWriter()
-    prev = [0, 0, 0]
-
-    def put_block(ci: int, bx: int, by: int) -> None:
-        dc_codes, ac_codes = (dc_y, ac_y) if ci == 0 else (dc_c, ac_c)
-        scale = 8 if ci == 0 else 4
-        m, n = _color_block_mn(ci, doc_id, bx, by)
-        dc = scale * m
-        diff = dc - prev[ci]
-        prev[ci] = dc
-        t = _jpeg_category(diff)
-        code, nbits = dc_codes[t]
-        bw.write(code, nbits)
-        if t:
-            bw.write(diff if diff >= 0 else diff + (1 << t) - 1, t)
-        if n:
-            zcode, znb = ac_codes[0xF0]
-            bw.write(zcode, znb)
-            bw.write(zcode, znb)
-            ac = scale * n
-            s = _jpeg_category(ac)
-            code, nbits = ac_codes[(6 << 4) | s]
-            bw.write(code, nbits)
-            bw.write(ac, s)
-        code, nbits = ac_codes[0x00]
-        bw.write(code, nbits)
-
-    for my in range((height + 15) // 16):
-        for mx in range((width + 15) // 16):
-            for dy in range(2):           # four Y blocks, dx fastest
-                for dx in range(2):
-                    put_block(0, 2 * mx + dx, 2 * my + dy)
-            put_block(1, mx, my)          # one Cb block (half-res grid)
-            put_block(2, mx, my)          # one Cr block
-    scan = bw.flush()
-
-    def seg(marker: int, body: bytes) -> bytes:
-        return bytes((0xFF, marker)) + (len(body) + 2).to_bytes(2, "big") + body
-
-    dqt = seg(0xDB, bytes((0x00,)) + bytes([1] * 64)) + seg(
-        0xDB, bytes((0x01,)) + bytes([2] * 64)
-    )
-    dht = (
-        seg(0xC4, bytes((0x00,)) + bytes(_DC_LENGTHS) + bytes(_DC_SYMBOLS))
-        + seg(0xC4, bytes((0x10,)) + bytes(_AC_RUN6_LENGTHS) + bytes(_AC_RUN6_SYMBOLS))
-        + seg(0xC4, bytes((0x01,)) + bytes(_DC_CHROMA_LENGTHS) + bytes(_DC_SYMBOLS))
-        + seg(
-            0xC4,
-            bytes((0x11,)) + bytes(_AC_RUN6_CHROMA_LENGTHS) + bytes(_AC_RUN6_SYMBOLS),
-        )
-    )
-    sof0 = seg(
-        0xC0,
-        bytes((8,)) + height.to_bytes(2, "big") + width.to_bytes(2, "big")
-        + bytes((3, 1, 0x22, 0, 2, 0x11, 1, 3, 0x11, 1)),
-    )
-    sos = seg(0xDA, bytes((3, 1, 0x00, 2, 0x11, 3, 0x11, 0, 63, 0)))
-    return b"\xff\xd8" + dqt + dht + sof0 + sos + scan + b"\xff\xd9"
+    return _synth_color(width, height, doc_id, _color_block_mn,
+                        (_DC_LENGTHS, _DC_CHROMA_LENGTHS), _DC_SYMBOLS,
+                        0xC0, 8, 0x22)
 
 
 class _BitReader:
@@ -2689,6 +2422,193 @@ def _huff_decode(br: "_BitReader", table: dict[tuple[int, int], int]) -> int:
 def _extend(v: int, t: int) -> int:
     """JPEG EXTEND: map t raw bits back to the signed coefficient."""
     return v if v >= (1 << (t - 1)) else v - (1 << t) + 1
+
+
+class _JpegSegments:
+    """The marker-segment walk every JPEG decoder runs (T.81 B.1.1.2):
+    checks SOI, then iterates ``(marker, body)`` up to EOI, raising on a
+    cut marker, lost marker sync, a cut length field, or a body shorter
+    than its length.  ``pos`` is the offset just past the last segment
+    yielded -- where an SOS's entropy-coded data starts; a decoder that
+    consumes that data sets ``pos`` to the marker ending it before the
+    walk resumes.  After EOI, ``pos`` is the offset just past EOI."""
+
+    def __init__(self, content: bytes) -> None:
+        if content[:2] != b"\xff\xd8":
+            raise ValueError("not a JPEG")
+        self.content = content
+        self.pos = 2
+
+    def __iter__(self):
+        content = self.content
+        while True:
+            pos = self.pos
+            if pos + 2 > len(content):
+                raise ValueError("truncated JPEG: marker walk ran out")
+            if content[pos] != 0xFF:
+                raise ValueError(f"corrupt JPEG: lost marker sync at {pos}")
+            marker = content[pos + 1]
+            pos += 2
+            if marker == 0xD9:
+                self.pos = pos
+                return
+            if pos + 2 > len(content):
+                raise ValueError("truncated JPEG: segment length cut")
+            ln = int.from_bytes(content[pos : pos + 2], "big")
+            body = content[pos + 2 : pos + ln]
+            if ln < 2 or len(body) < ln - 2:
+                raise ValueError("truncated JPEG: segment body cut")
+            self.pos = pos + ln
+            yield marker, body
+
+
+def _parse_dqt(body: bytes, qt: dict) -> None:
+    """DQT (B.2.4.1) into ``qt[Tq]``: 8-bit tables only."""
+    at = 0
+    while at < len(body):
+        pq, tq = body[at] >> 4, body[at] & 0x0F
+        if pq != 0:
+            raise ValueError("16-bit quant tables not supported")
+        if at + 65 > len(body):
+            raise ValueError("truncated JPEG: DQT cut")
+        qt[tq] = list(body[at + 1 : at + 65])
+        at += 65
+
+
+def _parse_dht(body: bytes, huff: dict) -> None:
+    """DHT (B.2.4.2) into ``huff[(Tc, Th)]``, a ``(code, nbits) -> symbol``
+    decode table."""
+    at = 0
+    while at < len(body):
+        tc, th = body[at] >> 4, body[at] & 0x0F
+        lengths = list(body[at + 1 : at + 17])
+        nsym = sum(lengths)
+        symbols = list(body[at + 17 : at + 17 + nsym])
+        if len(symbols) < nsym:
+            raise ValueError("truncated JPEG: DHT cut")
+        codes = _canonical_codes(lengths, symbols)
+        huff[(tc, th)] = {(c, n): s for s, (c, n) in codes.items()}
+        at += 17 + nsym
+
+
+def _parse_dac(body: bytes, dc_cond: dict, ac_cond: dict) -> None:
+    """DAC (B.2.4.3): DC conditioning ``(L, U)`` into ``dc_cond[Tb]``, AC
+    ``Kx`` into ``ac_cond[Tb]``."""
+    at = 0
+    while at + 1 < len(body):
+        tc, tb = body[at] >> 4, body[at] & 0x0F
+        cs = body[at + 1]
+        if tc == 0:
+            low, up = cs & 0x0F, cs >> 4
+            if low > up or up > 15:
+                raise ValueError(f"bad DC arithmetic conditioning 0x{cs:02x}")
+            dc_cond[tb] = (low, up)
+        elif tc == 1:
+            if not 1 <= cs <= 63:
+                raise ValueError(f"bad AC arithmetic conditioning {cs}")
+            ac_cond[tb] = cs
+        else:
+            raise ValueError(f"bad DAC table class {tc}")
+        at += 2
+
+
+def _parse_dri(body: bytes) -> int:
+    """DRI (B.2.4.4): the restart interval."""
+    if len(body) < 2:
+        raise ValueError("truncated JPEG: DRI cut")
+    return int.from_bytes(body[:2], "big")
+
+
+def _entropy_to_eoi(content: bytes, at: int) -> bytes:
+    """The entropy-coded data of a single-scan file: from ``at`` to the
+    first FF D9 (stuffed FF 00 and RST markers are not D9), which must
+    end the file."""
+    end = content.find(b"\xff\xd9", at)
+    if end < 0:
+        raise ValueError("truncated JPEG: no EOI")
+    if end + 2 != len(content):
+        raise ValueError(
+            f"trailing bytes after JPEG EOI ({len(content) - end - 2})")
+    return content[at:end]
+
+
+def _frame_components(sof: bytes, ncomp: int, qt: dict):
+    """A sequential frame's components as ``(id, dequant table, h, v)``
+    plus the sampling maxima.  Raises on factors outside 1-2, subsampled
+    grayscale, a missing quant table, or factors that do not divide the
+    maxima (integral replication upsampling only)."""
+    comps = []
+    for i in range(ncomp):
+        cid, samp, qid = sof[6 + 3 * i], sof[7 + 3 * i], sof[8 + 3 * i]
+        hs, vs = samp >> 4, samp & 0x0F
+        if hs not in (1, 2) or vs not in (1, 2):
+            raise ValueError(
+                f"unsupported JPEG sampling 0x{samp:02x}; factors beyond "
+                "1-2 not decoded here"
+            )
+        if ncomp == 1 and samp != 0x11:
+            raise ValueError(
+                f"unsupported JPEG sampling 0x{samp:02x} for grayscale")
+        if qid not in qt:
+            raise ValueError(f"JPEG references missing quant table {qid}")
+        comps.append((cid, qt[qid], hs, vs))
+    hmax = max(c[2] for c in comps)
+    vmax = max(c[3] for c in comps)
+    if any(hmax % c[2] or vmax % c[3] for c in comps):
+        raise ValueError(
+            "unsupported JPEG sampling: factors must divide the maxima "
+            "(integral replication upsampling only)"
+        )
+    return comps, hmax, vmax
+
+
+def _read_ac(br: "_BitReader", ac_tab: dict, q: list, coeffs: list) -> None:
+    """Sequential Huffman AC decode of one block (run/size symbols, ZRL,
+    EOB) into the zigzag list ``coeffs``, dequantized by ``q``."""
+    k = 1
+    while k < 64:
+        sym = _huff_decode(br, ac_tab)
+        if sym == 0x00:  # EOB
+            break
+        run, size = sym >> 4, sym & 0x0F
+        if size == 0:
+            if run != 15:
+                raise ValueError(f"corrupt JPEG: AC symbol {sym:02x}")
+            k += 16  # ZRL
+            continue
+        k += run
+        if k >= 64:
+            raise ValueError("corrupt JPEG: AC run past block end")
+        coeffs[k] = _extend(br.bits(size), size) * q[k]
+        k += 1
+
+
+def _dezigzag(coeffs: list):
+    """The 8x8 float frequency block of 64 zigzag-ordered coefficients."""
+    import numpy as np
+
+    block = np.zeros((8, 8))
+    for k, (r, c) in enumerate(_ZIGZAG):
+        if coeffs[k]:
+            block[r][c] = float(coeffs[k])
+    return block
+
+
+def _idct_basis():
+    """The 8x8 IDCT basis ``m[y][v] = C(v) * cos((2y+1) * v * pi / 16)``
+    with ``C(0) = 1/sqrt(2)``: ``m @ F @ m.T / 4`` is the 2-D IDCT."""
+    import math
+
+    import numpy as np
+
+    c_norm = [1.0 / math.sqrt(2.0)] + [1.0] * 7
+    cos_tab = [
+        [math.cos((2 * x + 1) * u * math.pi / 16) for u in range(8)]
+        for x in range(8)
+    ]
+    return np.array(
+        [[c_norm[v] * cos_tab[y][v] for v in range(8)] for y in range(8)]
+    )
 
 
 # --------------------------------------------------------------------------
@@ -3145,6 +3065,36 @@ def _qm_dec_ac(dec: "_QMDecoder", bins: list, kx: int) -> list:
     return ac
 
 
+def _qm_scan(width: int, height: int, ncomp: int, coef, ri: int = 0) -> bytes:
+    """QM-code one interleaved sequential scan under the Annex F models:
+    ``coef(ci, bx, by)`` gives a block's DC and its 63 zigzag ACs.
+    Component 0 codes under conditioning table 0 (DC L=0/U=1, AC Kx=5);
+    the others share table 1 (DC L=0/U=2, AC Kx=3) and its statistics
+    while keeping their own DC predictors and conditioning categories.
+    ``ri > 0`` splits the scan every ``ri`` MCUs into INDEPENDENT
+    codewords -- fresh coder, statistics, predictors and categories --
+    joined by RST markers (F.1.4.4)."""
+    cond = ((0, 1), (0, 2))
+    kx = (5, 3)
+    parts = []
+    for seg in _restart_segments(_block_grid(width, height), ri):
+        enc = _QMEncoder()
+        dc_bins = [_qm_fresh_bins(_QM_DC_BINS) for _ in range(min(ncomp, 2))]
+        ac_bins = [_qm_fresh_bins(_QM_AC_BINS) for _ in range(min(ncomp, 2))]
+        prev = [0] * ncomp
+        ctx = [0] * ncomp
+        for bx, by in seg:
+            for ci in range(ncomp):
+                tb = min(ci, 1)
+                dc, ac = coef(ci, bx, by)
+                ctx[ci] = _qm_enc_dc(
+                    enc, dc_bins[tb], dc - prev[ci], ctx[ci], cond[tb])
+                prev[ci] = dc
+                _qm_enc_ac(enc, ac_bins[tb], ac, kx[tb])
+        parts.append(enc.flush())
+    return _join_rst(parts)
+
+
 def synth_jpeg_gray_arith(width: int, height: int, doc_id: int) -> bytes:
     """A REAL arithmetic-coded (SOF9) grayscale JFIF, r17: the exact
     image class of :func:`synth_jpeg_gray_ac` -- per 8x8 block
@@ -3161,48 +3111,23 @@ def synth_jpeg_gray_arith(width: int, height: int, doc_id: int) -> bytes:
     statistics areas, DC predictor and conditioning category reset --
     joined by cycling RSTn markers per F.1.4.4/E.2.4, so the same
     closed form also gates arithmetic restart framing."""
-    mcus_x, mcus_y = (width + 7) // 8, (height + 7) // 8
-    order = [(bx, by) for by in range(mcus_y) for bx in range(mcus_x)]
     restart = doc_id % 3 + 1 if doc_id % 2 else 0
-    segments = (
-        [order[i:i + restart] for i in range(0, len(order), restart)]
-        if restart else [order]
-    )
-    parts = []
-    for seg in segments:
-        enc = _QMEncoder()
-        dc_bins = _qm_fresh_bins(_QM_DC_BINS)
-        ac_bins = _qm_fresh_bins(_QM_AC_BINS)
-        dc_ctx = 0
-        prev_dc = 0
-        for bx, by in seg:
-            m = (17 * doc_id + 5 * bx + 11 * by) % 129 - 64
-            n = (7 * doc_id + 3 * bx + by) % 27
-            dc = 8 * m
-            dc_ctx = _qm_enc_dc(enc, dc_bins, dc - prev_dc, dc_ctx, (0, 1))
-            prev_dc = dc
-            ac = [0] * 63
-            ac[38] = 8 * n  # zigzag index 39 = the (4,4) basis
-            _qm_enc_ac(enc, ac_bins, ac, 5)
-        parts.append(enc.flush())
-    scan = parts[0] + b"".join(
-        bytes((0xFF, 0xD0 + (i % 8))) + p for i, p in enumerate(parts[1:])
-    )
 
-    def seg_hdr(marker: int, body: bytes) -> bytes:
-        return bytes((0xFF, marker)) + (len(body) + 2).to_bytes(2, "big") + body
+    def coef(_ci: int, bx: int, by: int) -> tuple[int, list]:
+        m, n = _color_block_mn(0, doc_id, bx, by)  # synth_jpeg_gray_ac's class
+        ac = [0] * 63
+        ac[38] = 8 * n  # zigzag index 39 = the (4,4) basis
+        return 8 * m, ac
 
-    dqt = seg_hdr(0xDB, bytes((0x00,)) + bytes([1] * 64))
-    # DAC (B.2.4.3): DC table 0 with Cs=(U<<4)|L=0x10, AC table 0 Cs=Kx=5
-    dac = seg_hdr(0xCC, bytes((0x00, 0x10, 0x10, 0x05)))
-    sof9 = seg_hdr(
-        0xC9,
-        bytes((8,)) + height.to_bytes(2, "big") + width.to_bytes(2, "big")
-        + bytes((1, 1, 0x11, 0)),
+    return _jfif(
+        _dqt(1),
+        # DAC (B.2.4.3): DC table 0 with Cs=(U<<4)|L=0x10, AC table 0 Cs=Kx=5
+        _seg(0xCC, bytes((0x00, 0x10, 0x10, 0x05))),
+        _sof(0xC9, 8, width, height, _SOF_GRAY),
+        _dri(restart) if restart else b"",
+        _sos(_SOS_GRAY),
+        _qm_scan(width, height, 1, coef, restart),
     )
-    dri = seg_hdr(0xDD, restart.to_bytes(2, "big")) if restart else b""
-    sos = seg_hdr(0xDA, bytes((1, 1, 0x00, 0, 63, 0)))
-    return b"\xff\xd8" + dqt + dac + sof9 + dri + sos + scan + b"\xff\xd9"
 
 
 def synth_jpeg_color_arith(width: int, height: int, doc_id: int) -> bytes:
@@ -3219,51 +3144,21 @@ def synth_jpeg_color_arith(width: int, height: int, doc_id: int) -> bytes:
     class matches the Huffman twin's, the decoded pixels must equal
     ``decode_jpeg_gray(synth_jpeg_color(...))`` bit-for-bit -- pinned in
     tests as a cross-entropy-coding invariant."""
-    enc = _QMEncoder()
-    dc_bins = {0: _qm_fresh_bins(_QM_DC_BINS), 1: _qm_fresh_bins(_QM_DC_BINS)}
-    ac_bins = {0: _qm_fresh_bins(_QM_AC_BINS), 1: _qm_fresh_bins(_QM_AC_BINS)}
-    cond = {0: (0, 1), 1: (0, 2)}
-    kx = {0: 5, 1: 3}
 
-    def mn(ci: int, bx: int, by: int) -> tuple[int, int]:
-        d = doc_id
-        if ci == 0:
-            return (17 * d + 5 * bx + 11 * by) % 129 - 64, (7 * d + 3 * bx + by) % 27
-        if ci == 1:
-            return (13 * d + 7 * bx + 3 * by) % 101 - 50, (11 * d + bx + 5 * by) % 23
-        return (19 * d + 3 * bx + 7 * by) % 101 - 50, (5 * d + 9 * bx + by) % 23
+    def coef(ci: int, bx: int, by: int) -> tuple[int, list]:
+        m, n = _color_block_mn(ci, doc_id, bx, by)
+        scale = 8 if ci == 0 else 4  # chroma halved, q=2
+        ac = [0] * 63
+        ac[38] = scale * n
+        return scale * m, ac
 
-    prev = [0, 0, 0]
-    ctx = [0, 0, 0]
-    for by in range((height + 7) // 8):
-        for bx in range((width + 7) // 8):
-            for ci in range(3):
-                tb = 0 if ci == 0 else 1
-                scale = 8 if ci == 0 else 4  # chroma halved, q=2
-                m, n = mn(ci, bx, by)
-                dc = scale * m
-                ctx[ci] = _qm_enc_dc(
-                    enc, dc_bins[tb], dc - prev[ci], ctx[ci], cond[tb])
-                prev[ci] = dc
-                ac = [0] * 63
-                ac[38] = scale * n
-                _qm_enc_ac(enc, ac_bins[tb], ac, kx[tb])
-    scan = enc.flush()
-
-    def seg_hdr(marker: int, body: bytes) -> bytes:
-        return bytes((0xFF, marker)) + (len(body) + 2).to_bytes(2, "big") + body
-
-    dqt = seg_hdr(0xDB, bytes((0x00,)) + bytes([1] * 64)) + seg_hdr(
-        0xDB, bytes((0x01,)) + bytes([2] * 64)
+    return _jfif(
+        _dqt(1, 2),
+        _seg(0xCC, bytes((0x00, 0x10, 0x01, 0x20, 0x10, 0x05, 0x11, 0x03))),
+        _sof(0xC9, 8, width, height, _SOF_COLOR),
+        _sos(_SOS_COLOR),
+        _qm_scan(width, height, 3, coef),
     )
-    dac = seg_hdr(0xCC, bytes((0x00, 0x10, 0x01, 0x20, 0x10, 0x05, 0x11, 0x03)))
-    sof9 = seg_hdr(
-        0xC9,
-        bytes((8,)) + height.to_bytes(2, "big") + width.to_bytes(2, "big")
-        + bytes((3, 1, 0x11, 0, 2, 0x11, 1, 3, 0x11, 1)),
-    )
-    sos = seg_hdr(0xDA, bytes((3, 1, 0x00, 2, 0x11, 3, 0x11, 0, 63, 0)))
-    return b"\xff\xd8" + dqt + dac + sof9 + sos + scan + b"\xff\xd9"
 
 
 def synth_jpeg_gray12_arith(width: int, height: int, doc_id: int) -> bytes:
@@ -3273,32 +3168,17 @@ def synth_jpeg_gray12_arith(width: int, height: int, doc_id: int) -> bytes:
     EOB-at-k=1 AC path and DC magnitude categories up to 15 through the
     Annex F tree, where the Huffman twin needed a custom length-5 DHT.
     Pixels must equal ``decode_jpeg_gray(synth_jpeg_gray12(...))``."""
-    enc = _QMEncoder()
-    dc_bins = _qm_fresh_bins(_QM_DC_BINS)
-    ac_bins = _qm_fresh_bins(_QM_AC_BINS)
-    ctx = 0
-    prev = 0
-    for by in range((height + 7) // 8):
-        for bx in range((width + 7) // 8):
-            v = (997 * doc_id + 131 * bx + 241 * by) % 4096
-            dc = 8 * (v - 2048)
-            ctx = _qm_enc_dc(enc, dc_bins, dc - prev, ctx, (0, 1))
-            prev = dc
-            _qm_enc_ac(enc, ac_bins, [0] * 63, 5)
-    scan = enc.flush()
 
-    def seg_hdr(marker: int, body: bytes) -> bytes:
-        return bytes((0xFF, marker)) + (len(body) + 2).to_bytes(2, "big") + body
+    def coef(_ci: int, bx: int, by: int) -> tuple[int, list]:
+        return 8 * ((997 * doc_id + 131 * bx + 241 * by) % 4096 - 2048), [0] * 63
 
-    dqt = seg_hdr(0xDB, bytes((0x00,)) + bytes([1] * 64))
-    dac = seg_hdr(0xCC, bytes((0x00, 0x10, 0x10, 0x05)))
-    sof9 = seg_hdr(
-        0xC9,
-        bytes((12,)) + height.to_bytes(2, "big") + width.to_bytes(2, "big")
-        + bytes((1, 1, 0x11, 0)),
+    return _jfif(
+        _dqt(1),
+        _seg(0xCC, bytes((0x00, 0x10, 0x10, 0x05))),
+        _sof(0xC9, 12, width, height, _SOF_GRAY),
+        _sos(_SOS_GRAY),
+        _qm_scan(width, height, 1, coef),
     )
-    sos = seg_hdr(0xDA, bytes((1, 1, 0x00, 0, 63, 0)))
-    return b"\xff\xd8" + dqt + dac + sof9 + sos + scan + b"\xff\xd9"
 
 
 # --------------------------------------------------------------------------
@@ -3330,56 +3210,28 @@ def synth_jpeg_gray_hier(width: int, height: int, doc_id: int) -> bytes:
         bw = _BitWriter()
         prev = 0
         for dc in dcs:
-            diff = dc - prev if predict else dc
+            _put_block(bw, dc_codes, ac_codes, dc - prev, 0)
             if predict:
                 prev = dc
-            t = _jpeg_category(diff)
-            code, nbits = dc_codes[t]
-            bw.write(code, nbits)
-            if t:
-                bw.write(diff if diff >= 0 else diff + (1 << t) - 1, t)
-            code, nbits = ac_codes[0x00]  # EOB
-            bw.write(code, nbits)
         return bw.flush()
 
     ref_dcs = [
         8 * (64 + (31 * doc_id + 17 * bx + 7 * by) % 128 - 128)
-        for by in range((height + 7) // 8)
-        for bx in range((w1 + 7) // 8)
+        for bx, by in _block_grid(w1, height)
     ]
     dif_dcs = [
         8 * ((23 * doc_id + 13 * bx + 3 * by) % 65 - 32)
-        for by in range((height + 7) // 8)
-        for bx in range((width + 7) // 8)
+        for bx, by in _block_grid(width, height)
     ]
-
-    def seg(marker: int, body: bytes) -> bytes:
-        return bytes((0xFF, marker)) + (len(body) + 2).to_bytes(2, "big") + body
-
-    def sof(marker: int, w: int) -> bytes:
-        return seg(
-            marker,
-            bytes((8,)) + height.to_bytes(2, "big") + w.to_bytes(2, "big")
-            + bytes((1, 1, 0x11, 0)),
-        )
-
-    dqt = seg(0xDB, bytes((0x00,)) + bytes([1] * 64))
-    dht = (
-        seg(0xC4, bytes((0x00,)) + bytes(_DC_LENGTHS) + bytes(_DC_SYMBOLS))
-        + seg(0xC4, bytes((0x10,)) + bytes(_AC_LENGTHS) + bytes(_AC_SYMBOLS))
-    )
-    dhp = seg(
-        0xDE,
-        bytes((8,)) + height.to_bytes(2, "big") + width.to_bytes(2, "big")
-        + bytes((1, 1, 0x11, 0)),
-    )
-    sos = seg(0xDA, bytes((1, 1, 0x00, 0, 63, 0)))
-    return (
-        b"\xff\xd8" + dqt + dht + dhp
-        + sof(0xC1, w1) + sos + frame_scan(ref_dcs, True)
-        + seg(0xDF, bytes((0x10,)))  # EXP: Eh=1, Ev=0
-        + sof(0xC5, width) + sos + frame_scan(dif_dcs, False)
-        + b"\xff\xd9"
+    return _jfif(
+        _dqt(1),
+        _dht((0x00, _DC_LENGTHS, _DC_SYMBOLS), (0x10, _AC_LENGTHS, _AC_SYMBOLS)),
+        _sof(0xDE, 8, width, height, _SOF_GRAY),  # DHP
+        _sof(0xC1, 8, w1, height, _SOF_GRAY), _sos(_SOS_GRAY),
+        frame_scan(ref_dcs, True),
+        _seg(0xDF, bytes((0x10,))),  # EXP: Eh=1, Ev=0
+        _sof(0xC5, 8, width, height, _SOF_GRAY), _sos(_SOS_GRAY),
+        frame_scan(dif_dcs, False),
     )
 
 
@@ -3416,8 +3268,6 @@ def _hier_frame_scan(content: bytes, scan_at: int, sof: bytes,
     frames only (differential frames code signed corrections, F.1.5),
     MCU-grid padding cropped at emission.  Returns ``(plane, position
     of the marker after the entropy data)``."""
-    import math
-
     import numpy as np
 
     if len(sof) < 9:
@@ -3469,35 +3319,9 @@ def _hier_frame_scan(content: bytes, scan_at: int, sof: bytes,
             else:
                 prev_dc += diff
                 coeffs[0] = prev_dc * q[0]
-            k = 1
-            while k < 64:
-                sym = _huff_decode(br, ac_tab)
-                if sym == 0x00:
-                    break
-                run, size = sym >> 4, sym & 0x0F
-                if size == 0:
-                    if run != 15:
-                        raise ValueError(f"corrupt JPEG: AC symbol {sym:02x}")
-                    k += 16
-                    continue
-                k += run
-                if k >= 64:
-                    raise ValueError("corrupt JPEG: AC run past block end")
-                coeffs[k] = _extend(br.bits(size), size) * q[k]
-                k += 1
-            block = np.zeros((8, 8))
-            for k2, (r, c) in enumerate(_ZIGZAG):
-                if coeffs[k2]:
-                    block[r][c] = float(coeffs[k2])
-            coeff_blocks.append((8 * my, 8 * mx, block))
-    c_norm = [1.0 / math.sqrt(2.0)] + [1.0] * 7
-    cos_tab = [
-        [math.cos((2 * x + 1) * u * math.pi / 16) for u in range(8)]
-        for x in range(8)
-    ]
-    m_basis = np.array(
-        [[c_norm[v] * cos_tab[y][v] for v in range(8)] for y in range(8)]
-    )
+            _read_ac(br, ac_tab, q, coeffs)
+            coeff_blocks.append((8 * my, 8 * mx, _dezigzag(coeffs)))
+    m_basis = _idct_basis()
     plane = np.zeros((mcus_y * 8, mcus_x * 8), dtype=np.int64)
     b = np.stack([t[2] for t in coeff_blocks])
     spat = np.einsum("yv,nvu,xu->nyx", m_basis, b, m_basis)
@@ -3520,9 +3344,7 @@ def _decode_jpeg_hierarchical(content: bytes) -> dict:
     Strictness contract identical to the other decoders."""
     import numpy as np
 
-    if content[:2] != b"\xff\xd8":
-        raise ValueError("not a JPEG")
-    pos = 2
+    segs = _JpegSegments(content)
     qt: dict[int, list[int]] = {}
     huff: dict[tuple[int, int], dict[tuple[int, int], int]] = {}
     dhp = None
@@ -3530,43 +3352,11 @@ def _decode_jpeg_hierarchical(content: bytes) -> dict:
     pending_exp: tuple[int, int] | None = None
     cur_sof = None
     cur_diff = False
-    while True:
-        if pos + 2 > len(content):
-            raise ValueError("truncated JPEG: marker walk ran out")
-        if content[pos] != 0xFF:
-            raise ValueError(f"corrupt JPEG: lost marker sync at {pos}")
-        marker = content[pos + 1]
-        pos += 2
-        if marker == 0xD9:
-            break
-        if pos + 2 > len(content):
-            raise ValueError("truncated JPEG: segment length cut")
-        ln = int.from_bytes(content[pos : pos + 2], "big")
-        body = content[pos + 2 : pos + ln]
-        if ln < 2 or len(body) < ln - 2:
-            raise ValueError("truncated JPEG: segment body cut")
+    for marker, body in segs:
         if marker == 0xDB:
-            at = 0
-            while at < len(body):
-                pq, tq = body[at] >> 4, body[at] & 0x0F
-                if pq != 0:
-                    raise ValueError("16-bit quant tables not supported")
-                if at + 65 > len(body):
-                    raise ValueError("truncated JPEG: DQT cut")
-                qt[tq] = list(body[at + 1 : at + 65])
-                at += 65
+            _parse_dqt(body, qt)
         elif marker == 0xC4:
-            at = 0
-            while at < len(body):
-                tc, th = body[at] >> 4, body[at] & 0x0F
-                lengths = list(body[at + 1 : at + 17])
-                nsym = sum(lengths)
-                symbols = list(body[at + 17 : at + 17 + nsym])
-                if len(symbols) < nsym:
-                    raise ValueError("truncated JPEG: DHT cut")
-                codes = _canonical_codes(lengths, symbols)
-                huff[(tc, th)] = {(c, n): s for s, (c, n) in codes.items()}
-                at += 17 + nsym
+            _parse_dht(body, huff)
         elif marker == 0xDE:
             if dhp is not None:
                 raise ValueError("duplicate DHP segment")
@@ -3594,8 +3384,8 @@ def _decode_jpeg_hierarchical(content: bytes) -> dict:
                 raise ValueError("hierarchical scan before DHP")
             if cur_sof is None:
                 raise ValueError("hierarchical scan before a frame header")
-            plane, pos = _hier_frame_scan(
-                content, pos + ln, cur_sof, cur_diff, body, qt, huff)
+            plane, segs.pos = _hier_frame_scan(
+                content, segs.pos, cur_sof, cur_diff, body, qt, huff)
             if pending_exp is not None:
                 ref = _hier_expand(ref, *pending_exp)
                 pending_exp = None
@@ -3618,11 +3408,9 @@ def _decode_jpeg_hierarchical(content: bytes) -> dict:
                     )
                 ref = np.clip(plane, 0, 255)
             cur_sof = None
-            continue  # pos already sits at the next marker
-        pos += ln
-    if pos != len(content):
+    if segs.pos != len(content):
         raise ValueError(
-            f"trailing bytes after JPEG EOI ({len(content) - pos})")
+            f"trailing bytes after JPEG EOI ({len(content) - segs.pos})")
     if dhp is None or ref is None:
         raise ValueError("hierarchical JPEG without DHP or frames")
     if len(dhp) < 9:
@@ -3835,9 +3623,8 @@ def synth_jpeg_gray_arith_prog(width: int, height: int, doc_id: int) -> bytes:
     restart segmentation in EVERY scan (fresh coder, statistics and DC
     predictor per segment).  Statistics areas reset at every scan
     start per G.2.2/F.1.4.4.1.4."""
-    mcus_x, mcus_y = (width + 7) // 8, (height + 7) // 8
-    order = [(bx, by) for by in range(mcus_y) for bx in range(mcus_x)]
     restart = doc_id % 3 + 1 if doc_id % 2 else 0
+    segments = _restart_segments(_block_grid(width, height), restart)
 
     def coefs(bx: int, by: int) -> tuple[int, list]:
         m = (17 * doc_id + 5 * bx + 11 * by) % 129 - 64
@@ -3848,19 +3635,9 @@ def synth_jpeg_gray_arith_prog(width: int, height: int, doc_id: int) -> bytes:
         ac[38] = 8 * n  # zigzag 39 = (4,4)
         return 8 * m, ac
 
-    def segments() -> list:
-        if not restart:
-            return [order]
-        return [order[i:i + restart] for i in range(0, len(order), restart)]
-
-    def join(parts: list) -> bytes:
-        return parts[0] + b"".join(
-            bytes((0xFF, 0xD0 + (i % 8))) + p for i, p in enumerate(parts[1:])
-        )
-
     def scan_dc_first(al: int) -> bytes:
         parts = []
-        for seg in segments():
+        for seg in segments:
             enc = _QMEncoder()
             bins = _qm_fresh_bins(_QM_DC_BINS)
             ctx = 0
@@ -3871,67 +3648,46 @@ def synth_jpeg_gray_arith_prog(width: int, height: int, doc_id: int) -> bytes:
                 ctx = _qm_enc_dc(enc, bins, sv - prev, ctx, (0, 1))
                 prev = sv
             parts.append(enc.flush())
-        return join(parts)
+        return _join_rst(parts)
 
     def scan_dc_refine(al: int) -> bytes:
         parts = []
-        for seg in segments():
+        for seg in segments:
             enc = _QMEncoder()
             for bx, by in seg:
                 dc, _ = coefs(bx, by)
                 enc.encode_fixed((dc >> al) & 1)
             parts.append(enc.flush())
-        return join(parts)
+        return _join_rst(parts)
 
-    def scan_ac_first(ss: int, se: int, al: int) -> bytes:
+    def scan_ac(ss: int, se: int, al: int, refine: bool) -> bytes:
         parts = []
-        for seg in segments():
+        for seg in segments:
             enc = _QMEncoder()
             bins = _qm_fresh_bins(_QM_AC_BINS)
             for bx, by in seg:
                 _, ac = coefs(bx, by)
-                _qm_enc_ac_band(enc, bins, ac, 5, ss, se, al)
+                if refine:
+                    _qm_enc_ac_refine(enc, bins, ac, ss, se, al, al + 1)
+                else:
+                    _qm_enc_ac_band(enc, bins, ac, 5, ss, se, al)
             parts.append(enc.flush())
-        return join(parts)
+        return _join_rst(parts)
 
-    def scan_ac_refine(ss: int, se: int, al: int) -> bytes:
-        parts = []
-        for seg in segments():
-            enc = _QMEncoder()
-            bins = _qm_fresh_bins(_QM_AC_BINS)
-            for bx, by in seg:
-                _, ac = coefs(bx, by)
-                _qm_enc_ac_refine(enc, bins, ac, ss, se, al, al + 1)
-            parts.append(enc.flush())
-        return join(parts)
-
-    def seg_hdr(marker: int, body: bytes) -> bytes:
-        return bytes((0xFF, marker)) + (len(body) + 2).to_bytes(2, "big") + body
-
-    def sos(ss: int, se: int, ah: int, al: int, scan: bytes) -> bytes:
-        return seg_hdr(
-            0xDA, bytes((1, 1, 0x00, ss, se, (ah << 4) | al))) + scan
-
-    dqt = seg_hdr(0xDB, bytes((0x00,)) + bytes([1] * 64))
-    dac = seg_hdr(0xCC, bytes((0x00, 0x10, 0x10, 0x05)))
-    sof10 = seg_hdr(
-        0xCA,
-        bytes((8,)) + height.to_bytes(2, "big") + width.to_bytes(2, "big")
-        + bytes((1, 1, 0x11, 0)),
-    )
-    dri = seg_hdr(0xDD, restart.to_bytes(2, "big")) if restart else b""
-    return (
-        b"\xff\xd8" + dqt + dac + sof10 + dri
-        + sos(0, 0, 0, 5, scan_dc_first(5))
-        + sos(0, 0, 5, 4, scan_dc_refine(4))
-        + sos(0, 0, 4, 3, scan_dc_refine(3))
-        + sos(1, 31, 0, 5, scan_ac_first(1, 31, 5))
-        + sos(32, 63, 0, 5, scan_ac_first(32, 63, 5))
-        + sos(1, 31, 5, 4, scan_ac_refine(1, 31, 4))
-        + sos(32, 63, 5, 4, scan_ac_refine(32, 63, 4))
-        + sos(1, 31, 4, 3, scan_ac_refine(1, 31, 3))
-        + sos(32, 63, 4, 3, scan_ac_refine(32, 63, 3))
-        + b"\xff\xd9"
+    return _jfif(
+        _dqt(1),
+        _seg(0xCC, bytes((0x00, 0x10, 0x10, 0x05))),
+        _sof(0xCA, 8, width, height, _SOF_GRAY),
+        _dri(restart) if restart else b"",
+        _sos(_SOS_GRAY, 0, 0, 0, 5), scan_dc_first(5),
+        _sos(_SOS_GRAY, 0, 0, 5, 4), scan_dc_refine(4),
+        _sos(_SOS_GRAY, 0, 0, 4, 3), scan_dc_refine(3),
+        _sos(_SOS_GRAY, 1, 31, 0, 5), scan_ac(1, 31, 5, False),
+        _sos(_SOS_GRAY, 32, 63, 0, 5), scan_ac(32, 63, 5, False),
+        _sos(_SOS_GRAY, 1, 31, 5, 4), scan_ac(1, 31, 4, True),
+        _sos(_SOS_GRAY, 32, 63, 5, 4), scan_ac(32, 63, 4, True),
+        _sos(_SOS_GRAY, 1, 31, 4, 3), scan_ac(1, 31, 3, True),
+        _sos(_SOS_GRAY, 32, 63, 4, 3), scan_ac(32, 63, 3, True),
     )
 
 
@@ -3950,11 +3706,7 @@ def _decode_jpeg_arith_progressive(content: bytes) -> dict:
     multi-component SOF10, non-decrementing approximation (Ah != Al+1
     on refinements), band/approximation violations.  Strictness
     contract identical to the other decoders."""
-    import numpy as np
-
-    if content[:2] != b"\xff\xd8":
-        raise ValueError("not a JPEG")
-    pos = 2
+    segs = _JpegSegments(content)
     qt: dict[int, list[int]] = {}
     dc_cond: dict[int, tuple[int, int]] = {}
     ac_cond: dict[int, int] = {}
@@ -3967,50 +3719,11 @@ def _decode_jpeg_arith_progressive(content: bytes) -> dict:
     blocks: list = []  # per block index: [dc] + 63 AC zigzag values
     saw_scan = False
     dc_al_seen: int | None = None
-    while True:
-        if pos + 2 > len(content):
-            raise ValueError("truncated JPEG: marker walk ran out")
-        if content[pos] != 0xFF:
-            raise ValueError(f"corrupt JPEG: lost marker sync at {pos}")
-        marker = content[pos + 1]
-        pos += 2
-        if marker == 0xD9:
-            break
-        if pos + 2 > len(content):
-            raise ValueError("truncated JPEG: segment length cut")
-        ln = int.from_bytes(content[pos : pos + 2], "big")
-        body = content[pos + 2 : pos + ln]
-        if ln < 2 or len(body) < ln - 2:
-            raise ValueError("truncated JPEG: segment body cut")
+    for marker, body in segs:
         if marker == 0xDB:
-            at = 0
-            while at < len(body):
-                pq, tq = body[at] >> 4, body[at] & 0x0F
-                if pq != 0:
-                    raise ValueError("16-bit quant tables not supported")
-                if at + 65 > len(body):
-                    raise ValueError("truncated JPEG: DQT cut")
-                qt[tq] = list(body[at + 1 : at + 65])
-                at += 65
+            _parse_dqt(body, qt)
         elif marker == 0xCC:
-            at = 0
-            while at + 1 < len(body):
-                tc, tb = body[at] >> 4, body[at] & 0x0F
-                cs = body[at + 1]
-                if tc == 0:
-                    low, up = cs & 0x0F, cs >> 4
-                    if low > up or up > 15:
-                        raise ValueError(
-                            f"bad DC arithmetic conditioning 0x{cs:02x}")
-                    dc_cond[tb] = (low, up)
-                elif tc == 1:
-                    if not 1 <= cs <= 63:
-                        raise ValueError(
-                            f"bad AC arithmetic conditioning {cs}")
-                    ac_cond[tb] = cs
-                else:
-                    raise ValueError(f"bad DAC table class {tc}")
-                at += 2
+            _parse_dac(body, dc_cond, ac_cond)
         elif marker == 0xCA:
             if sof is not None:
                 raise ValueError("corrupt JPEG: multiple SOF markers")
@@ -4032,9 +3745,7 @@ def _decode_jpeg_arith_progressive(content: bytes) -> dict:
             nblocks_y = (height + 7) // 8
             blocks = [[0] * 64 for _ in range(nblocks_x * nblocks_y)]
         elif marker == 0xDD:
-            if len(body) < 2:
-                raise ValueError("truncated JPEG: DRI cut")
-            restart_interval = int.from_bytes(body[:2], "big")
+            restart_interval = _parse_dri(body)
         elif marker == 0xDA:
             if sof is None:
                 raise ValueError("arithmetic progressive scan before SOF10")
@@ -4062,7 +3773,7 @@ def _decode_jpeg_arith_progressive(content: bytes) -> dict:
                     dc_al_seen = al
                 elif dc_al_seen is None:
                     raise ValueError("DC refinement before DC first scan")
-            scan_at = pos + ln
+            scan_at = segs.pos
             end = scan_at
             while True:
                 if end + 1 >= len(content):
@@ -4113,12 +3824,10 @@ def _decode_jpeg_arith_progressive(content: bytes) -> dict:
                         _qm_dec_ac_refine(dec, ac_bins, ac, ss_, se_, al)
                     b[1:] = ac
             saw_scan = True
-            pos = end
-            continue
-        pos += ln
-    if pos != len(content):
+            segs.pos = end
+    if segs.pos != len(content):
         raise ValueError(
-            f"trailing bytes after JPEG EOI ({len(content) - pos})")
+            f"trailing bytes after JPEG EOI ({len(content) - segs.pos})")
     if sof is None or not saw_scan:
         raise ValueError("arithmetic progressive JPEG without SOF10/scan")
     if qid not in qt:
@@ -4127,10 +3836,7 @@ def _decode_jpeg_arith_progressive(content: bytes) -> dict:
     out_blocks = []
     for bi, b in enumerate(blocks):
         by, bx = divmod(bi, nblocks_x)
-        block = np.zeros((8, 8))
-        for k2, (r, c) in enumerate(_ZIGZAG):
-            if b[k2]:
-                block[r][c] = float(b[k2] * q[k2])
+        block = _dezigzag([v * qk for v, qk in zip(b, q)])
         out_blocks.append((8 * by, 8 * bx, block))
     comps = [(1, q, 1, 1)]
     return _jpeg_emit([out_blocks], comps, 1, 1,
@@ -4214,33 +3920,16 @@ def synth_jpeg_gray_lossless(width: int, height: int, doc_id: int) -> bytes:
         diff = (px(x, y) - pred) & 0xFFFF
         if diff >= 0x8000:
             diff -= 0x10000
-        t = _jpeg_category(diff)
-        code, nbits = dc_codes[t]
-        bw.write(code, nbits)
-        if t and t < 16:
-            bw.write(diff if diff >= 0 else diff + (1 << t) - 1, t)
+        _put_diff(bw, dc_codes, diff)
         n_in_segment += 1
     parts.append(bw.flush())
-    scan = parts[0] + b"".join(
-        bytes((0xFF, 0xD0 + (i % 8))) + p for i, p in enumerate(parts[1:])
+    return _jfif(
+        _dht((0x00, _DC_LOSSLESS_LENGTHS, _DC_LOSSLESS_SYMBOLS)),
+        _sof(0xC3, 8, width, height, _SOF_GRAY),
+        _dri(restart) if restart else b"",
+        _sos(_SOS_GRAY, sel, 0),
+        _join_rst(parts),
     )
-
-    def seg(marker: int, body: bytes) -> bytes:
-        return bytes((0xFF, marker)) + (len(body) + 2).to_bytes(2, "big") + body
-
-    dht = seg(
-        0xC4,
-        bytes((0x00,)) + bytes(_DC_LOSSLESS_LENGTHS)
-        + bytes(_DC_LOSSLESS_SYMBOLS),
-    )
-    sof3 = seg(
-        0xC3,
-        bytes((8,)) + height.to_bytes(2, "big") + width.to_bytes(2, "big")
-        + bytes((1, 1, 0x11, 0)),
-    )
-    dri = seg(0xDD, restart.to_bytes(2, "big")) if restart else b""
-    sos = seg(0xDA, bytes((1, 1, 0x00, sel, 0, 0)))
-    return b"\xff\xd8" + dht + sof3 + dri + sos + scan + b"\xff\xd9"
 
 
 def _decode_jpeg_lossless(content: bytes) -> dict:
@@ -4256,50 +3945,22 @@ def _decode_jpeg_lossless(content: bytes) -> dict:
     to the scan-start state.  Grayscale 8-bit, point transform 0 only,
     matching the synthesizer's envelope.  Strictness contract identical
     to the other decoders."""
-    if content[:2] != b"\xff\xd8":
-        raise ValueError("not a JPEG")
-    pos = 2
+    segs = _JpegSegments(content)
     huff: dict[tuple[int, int], dict[tuple[int, int], int]] = {}
     sof = None
     restart_interval = 0
-    while True:
-        if pos + 2 > len(content):
-            raise ValueError("truncated JPEG: marker walk ran out")
-        if content[pos] != 0xFF:
-            raise ValueError(f"corrupt JPEG: lost marker sync at {pos}")
-        marker = content[pos + 1]
-        pos += 2
-        if marker == 0xD9:
-            raise ValueError("JPEG EOI before any scan")
-        if pos + 2 > len(content):
-            raise ValueError("truncated JPEG: segment length cut")
-        ln = int.from_bytes(content[pos : pos + 2], "big")
-        body = content[pos + 2 : pos + ln]
-        if ln < 2 or len(body) < ln - 2:
-            raise ValueError("truncated JPEG: segment body cut")
+    for marker, body in segs:
         if marker == 0xC4:
-            at = 0
-            while at < len(body):
-                tc, th = body[at] >> 4, body[at] & 0x0F
-                lengths = list(body[at + 1 : at + 17])
-                nsym = sum(lengths)
-                symbols = list(body[at + 17 : at + 17 + nsym])
-                if len(symbols) < nsym:
-                    raise ValueError("truncated JPEG: DHT cut")
-                codes = _canonical_codes(lengths, symbols)
-                huff[(tc, th)] = {(c, n): s for s, (c, n) in codes.items()}
-                at += 17 + nsym
+            _parse_dht(body, huff)
         elif marker == 0xC3:
             sof = body
         elif marker == 0xDD:
-            if len(body) < 2:
-                raise ValueError("truncated JPEG: DRI cut")
-            restart_interval = int.from_bytes(body[:2], "big")
+            restart_interval = _parse_dri(body)
         elif marker == 0xDA:
-            scan_at = pos + ln
             sos = body
             break
-        pos += ln
+    else:
+        raise ValueError("JPEG EOI before any scan")
     if sof is None:
         raise ValueError("lossless JPEG missing SOF3")
     if len(sof) < 9:
@@ -4324,18 +3985,7 @@ def _decode_jpeg_lossless(content: bytes) -> dict:
         raise ValueError(f"bad lossless predictor selector {sel}")
     if pt != 0:
         raise ValueError("lossless point transform != 0 not decoded here")
-
-    end = scan_at
-    while True:
-        if end + 1 >= len(content):
-            raise ValueError("truncated JPEG: no EOI")
-        if content[end] == 0xFF and content[end + 1] == 0xD9:
-            break
-        end += 1
-    if end + 2 != len(content):
-        raise ValueError(
-            f"trailing bytes after JPEG EOI ({len(content) - end - 2})")
-    br = _BitReader(content[scan_at:end])
+    br = _BitReader(_entropy_to_eoi(content, segs.pos))
     out = [0] * (width * height)
     n_in_segment = 0
     seg_start = 0
@@ -4388,72 +4038,26 @@ def _decode_jpeg_arith(content: bytes) -> dict:
     sequential Huffman decoder's envelope.  Strictness contract
     identical: truncations, bad markers, missing tables raise
     ``ValueError``."""
-    import numpy as np
-
-    if content[:2] != b"\xff\xd8":
-        raise ValueError("not a JPEG")
-    pos = 2
+    segs = _JpegSegments(content)
     qt: dict[int, list[int]] = {}
     dc_cond: dict[int, tuple[int, int]] = {}
     ac_cond: dict[int, int] = {}
     sof = None
-    scan_at = None
     restart_interval = 0
-    while True:
-        if pos + 2 > len(content):
-            raise ValueError("truncated JPEG: marker walk ran out")
-        if content[pos] != 0xFF:
-            raise ValueError(f"corrupt JPEG: lost marker sync at {pos}")
-        marker = content[pos + 1]
-        pos += 2
-        if marker == 0xD9:
-            raise ValueError("JPEG EOI before any scan")
-        if pos + 2 > len(content):
-            raise ValueError("truncated JPEG: segment length cut")
-        ln = int.from_bytes(content[pos : pos + 2], "big")
-        body = content[pos + 2 : pos + ln]
-        if ln < 2 or len(body) < ln - 2:
-            raise ValueError("truncated JPEG: segment body cut")
+    for marker, body in segs:
         if marker == 0xDB:
-            at = 0
-            while at < len(body):
-                pq, tq = body[at] >> 4, body[at] & 0x0F
-                if pq != 0:
-                    raise ValueError("16-bit quant tables not supported")
-                if at + 65 > len(body):
-                    raise ValueError("truncated JPEG: DQT cut")
-                qt[tq] = list(body[at + 1 : at + 65])
-                at += 65
-        elif marker == 0xCC:  # DAC
-            at = 0
-            while at + 1 < len(body):
-                tc, tb = body[at] >> 4, body[at] & 0x0F
-                cs = body[at + 1]
-                if tc == 0:
-                    low, up = cs & 0x0F, cs >> 4
-                    if low > up or up > 15:
-                        raise ValueError(
-                            f"bad DC arithmetic conditioning 0x{cs:02x}")
-                    dc_cond[tb] = (low, up)
-                elif tc == 1:
-                    if not 1 <= cs <= 63:
-                        raise ValueError(
-                            f"bad AC arithmetic conditioning {cs}")
-                    ac_cond[tb] = cs
-                else:
-                    raise ValueError(f"bad DAC table class {tc}")
-                at += 2
+            _parse_dqt(body, qt)
+        elif marker == 0xCC:
+            _parse_dac(body, dc_cond, ac_cond)
         elif marker == 0xC9:
             sof = body
         elif marker == 0xDD:
-            if len(body) < 2:
-                raise ValueError("truncated JPEG: DRI cut")
-            restart_interval = int.from_bytes(body[:2], "big")
+            restart_interval = _parse_dri(body)
         elif marker == 0xDA:
-            scan_at = pos + ln
             sos = body
             break
-        pos += ln
+    else:
+        raise ValueError("JPEG EOI before any scan")
     if sof is None:
         raise ValueError("arithmetic JPEG missing SOF9")
     if len(sof) < 9:
@@ -4471,28 +4075,7 @@ def _decode_jpeg_arith(content: bytes) -> dict:
         raise ValueError(f"short JPEG SOF9 body ({len(sof)} bytes)")
     if width <= 0 or height <= 0:
         raise ValueError(f"degenerate JPEG dimensions {width}x{height}")
-    comps = []  # (component id, dequant table, h factor, v factor)
-    for i in range(ncomp):
-        cid, samp, qid = sof[6 + 3 * i], sof[7 + 3 * i], sof[8 + 3 * i]
-        hs, vs = samp >> 4, samp & 0x0F
-        if hs not in (1, 2) or vs not in (1, 2):
-            raise ValueError(
-                f"unsupported JPEG sampling 0x{samp:02x}; factors beyond "
-                "1-2 not decoded here"
-            )
-        if ncomp == 1 and samp != 0x11:
-            raise ValueError(
-                f"unsupported JPEG sampling 0x{samp:02x} for grayscale")
-        if qid not in qt:
-            raise ValueError(f"JPEG references missing quant table {qid}")
-        comps.append((cid, qt[qid], hs, vs))
-    hmax = max(c[2] for c in comps)
-    vmax = max(c[3] for c in comps)
-    if any(hmax % c[2] or vmax % c[3] for c in comps):
-        raise ValueError(
-            "unsupported JPEG sampling: factors must divide the maxima "
-            "(integral replication upsampling only)"
-        )
+    comps, hmax, vmax = _frame_components(sof, ncomp, qt)
     mcu_w, mcu_h = 8 * hmax, 8 * vmax
     mcus_x = (width + mcu_w - 1) // mcu_w
     mcus_y = (height + mcu_h - 1) // mcu_h
@@ -4509,20 +4092,7 @@ def _decode_jpeg_arith(content: bytes) -> dict:
         if sid != comps[i][0]:
             raise ValueError("SOS component order must match SOF")
         tabs.append((tt >> 4, tt & 0x0F))
-
-    # locate EOI (RSTn markers inside the scan are not 0xD9, so the
-    # first FF D9 is the terminator, same as the Huffman walk)
-    end = scan_at
-    while True:
-        if end + 1 >= len(content):
-            raise ValueError("truncated JPEG: no EOI")
-        if content[end] == 0xFF and content[end + 1] == 0xD9:
-            break
-        end += 1
-    if end + 2 != len(content):
-        raise ValueError(
-            f"trailing bytes after JPEG EOI ({len(content) - end - 2})")
-    scan = content[scan_at:end]
+    scan = _entropy_to_eoi(content, segs.pos)
 
     def fresh_stats():
         dc_b = {tb: _qm_fresh_bins(_QM_DC_BINS) for tb, _ in tabs}
@@ -4563,12 +4133,9 @@ def _decode_jpeg_arith(content: bytes) -> dict:
                         prev[ci] += diff
                         ac = _qm_dec_ac(dec, ac_bins[atb],
                                         ac_cond.get(atb, 5))
-                        block = np.zeros((8, 8))
-                        block[0][0] = float(prev[ci] * q[0])
-                        for k in range(1, 64):
-                            if ac[k - 1]:
-                                r, c = _ZIGZAG[k]
-                                block[r][c] = float(ac[k - 1] * q[k])
+                        block = _dezigzag(
+                            [prev[ci] * q[0]]
+                            + [a * qk for a, qk in zip(ac, q[1:])])
                         blocks[ci].append(
                             (8 * (my * vs + dy), 8 * (mx * hs + dx), block)
                         )
@@ -4593,54 +4160,17 @@ def decode_jpeg_gray(content: bytes) -> dict:
     Strict: truncations, unexpected markers, missing tables, and
     trailing bytes after EOI raise ``ValueError``.  (The name predates
     color support; ``decode_jpeg_baseline`` is the accurate alias.)"""
-    import math
-
-    if content[:2] != b"\xff\xd8":
-        raise ValueError("not a JPEG")
-    pos = 2
+    segs = _JpegSegments(content)
     qt: dict[int, list[int]] = {}
     huff: dict[tuple[int, int], dict[tuple[int, int], int]] = {}
     sof = None
     sof_marker = 0xC0
-    scan_at = None
     restart_interval = 0
-    while True:
-        if pos + 2 > len(content):
-            raise ValueError("truncated JPEG: marker walk ran out")
-        if content[pos] != 0xFF:
-            raise ValueError(f"corrupt JPEG: lost marker sync at {pos}")
-        marker = content[pos + 1]
-        pos += 2
-        if marker == 0xD9:
-            raise ValueError("JPEG EOI before any scan")
-        if pos + 2 > len(content):
-            raise ValueError("truncated JPEG: segment length cut")
-        ln = int.from_bytes(content[pos : pos + 2], "big")
-        body = content[pos + 2 : pos + ln]
-        if ln < 2 or len(body) < ln - 2:
-            raise ValueError("truncated JPEG: segment body cut")
+    for marker, body in segs:
         if marker == 0xDB:
-            at = 0
-            while at < len(body):
-                pq, tq = body[at] >> 4, body[at] & 0x0F
-                if pq != 0:
-                    raise ValueError("16-bit quant tables not supported")
-                if at + 65 > len(body):
-                    raise ValueError("truncated JPEG: DQT cut")
-                qt[tq] = list(body[at + 1 : at + 65])
-                at += 65
+            _parse_dqt(body, qt)
         elif marker == 0xC4:
-            at = 0
-            while at < len(body):
-                tc, th = body[at] >> 4, body[at] & 0x0F
-                lengths = list(body[at + 1 : at + 17])
-                nsym = sum(lengths)
-                symbols = list(body[at + 17 : at + 17 + nsym])
-                if len(symbols) < nsym:
-                    raise ValueError("truncated JPEG: DHT cut")
-                codes = _canonical_codes(lengths, symbols)
-                huff[(tc, th)] = {(c, n): s for s, (c, n) in codes.items()}
-                at += 17 + nsym
+            _parse_dht(body, huff)
         elif marker in (0xC0, 0xC1):
             # SOF0 baseline (8-bit) or SOF1 extended sequential Huffman
             # (8- or 12-bit, r16) -- identical entropy organization
@@ -4671,14 +4201,12 @@ def decode_jpeg_gray(content: bytes) -> dict:
             # DRI (r16): restart intervals decode for real -- the MCU
             # loop consumes RSTn markers at segment boundaries and resets
             # the DC predictors per T.81 E.2.4.
-            if len(body) < 2:
-                raise ValueError("truncated JPEG: DRI cut")
-            restart_interval = int.from_bytes(body[:2], "big")
+            restart_interval = _parse_dri(body)
         elif marker == 0xDA:
-            scan_at = pos + ln
             sos = body
             break
-        pos += ln
+    else:
+        raise ValueError("JPEG EOI before any scan")
     if sof is None:
         raise ValueError("JPEG missing SOF0")
     # A length-consistent but short SOF0/SOS body must raise ValueError
@@ -4709,29 +4237,7 @@ def decode_jpeg_gray(content: bytes) -> dict:
         raise ValueError(f"short JPEG SOF0 body ({len(sof)} bytes)")
     if width <= 0 or height <= 0:
         raise ValueError(f"degenerate JPEG dimensions {width}x{height}")
-    comps = []  # (component id, dequant table, h factor, v factor)
-    for i in range(ncomp):
-        cid, samp, qid = sof[6 + 3 * i], sof[7 + 3 * i], sof[8 + 3 * i]
-        hs, vs = samp >> 4, samp & 0x0F
-        if hs not in (1, 2) or vs not in (1, 2):
-            raise ValueError(
-                f"unsupported JPEG sampling 0x{samp:02x}; factors beyond "
-                "1-2 not decoded here"
-            )
-        if ncomp == 1 and samp != 0x11:
-            raise ValueError(
-                f"unsupported JPEG sampling 0x{samp:02x} for grayscale"
-            )
-        if qid not in qt:
-            raise ValueError(f"JPEG references missing quant table {qid}")
-        comps.append((cid, qt[qid], hs, vs))
-    hmax = max(c[2] for c in comps)
-    vmax = max(c[3] for c in comps)
-    if any(hmax % c[2] or vmax % c[3] for c in comps):
-        raise ValueError(
-            "unsupported JPEG sampling: factors must divide the maxima "
-            "(integral replication upsampling only)"
-        )
+    comps, hmax, vmax = _frame_components(sof, ncomp, qt)
     mcu_w, mcu_h = 8 * hmax, 8 * vmax
     # Partial MCUs (r15): the scan always carries a WHOLE number of MCUs
     # (the encoder pads the image to the MCU grid per the spec); the
@@ -4755,53 +4261,18 @@ def decode_jpeg_gray(content: bytes) -> dict:
         if (0, dc_id) not in huff or (1, ac_id) not in huff:
             raise ValueError("JPEG scan references missing Huffman tables")
         tabs.append((huff[(0, dc_id)], huff[(1, ac_id)]))
-
-    # locate EOI: entropy data runs to the 0xFFD9 marker (0xFF00 is data)
-    end = scan_at
-    while True:
-        if end + 1 >= len(content):
-            raise ValueError("truncated JPEG: no EOI")
-        if content[end] == 0xFF and content[end + 1] == 0xD9:
-            break
-        end += 1
-    if end + 2 != len(content):
-        raise ValueError(
-            f"trailing bytes after JPEG EOI ({len(content) - end - 2})"
-        )
-    br = _BitReader(content[scan_at:end])
+    br = _BitReader(_entropy_to_eoi(content, segs.pos))
 
     # the batched-einsum IDCT + emission live in _jpeg_emit (shared with
     # the progressive decoder)
-    import numpy as np
-
     def read_coeffs(dc_tab, ac_tab, q, prev_dc):
         coeffs = [0] * 64
         t = _huff_decode(br, dc_tab)
         diff = _extend(br.bits(t), t) if t else 0
         prev_dc += diff
         coeffs[0] = prev_dc * q[0]
-        k = 1
-        while k < 64:
-            sym = _huff_decode(br, ac_tab)
-            if sym == 0x00:  # EOB
-                break
-            run, size = sym >> 4, sym & 0x0F
-            if size == 0:
-                if run != 15:
-                    raise ValueError(f"corrupt JPEG: AC symbol {sym:02x}")
-                k += 16  # ZRL
-                continue
-            k += run
-            if k >= 64:
-                raise ValueError("corrupt JPEG: AC run past block end")
-            coeffs[k] = _extend(br.bits(size), size) * q[k]
-            k += 1
-        # de-zigzag into the 8x8 frequency block
-        block = np.zeros((8, 8))
-        for k2, (r, c) in enumerate(_ZIGZAG):
-            if coeffs[k2]:
-                block[r][c] = float(coeffs[k2])
-        return block, prev_dc
+        _read_ac(br, ac_tab, q, coeffs)
+        return _dezigzag(coeffs), prev_dc
 
     # Interleaved MCU scan: per MCU each component contributes h*v 8x8
     # blocks in raster order (dx fastest), in SOF component order, with an
@@ -4851,19 +4322,10 @@ def _jpeg_emit(blocks, comps, hmax, vmax, pw, ph, width, height,
     INTEGER arithmetic, so an external SQL oracle reproduces the
     conversion bit-for-bit).  Subsampled chroma reads via replication
     index grids (x // rx, y // ry), vectorized."""
-    import math
-
     import numpy as np
 
     ncomp = len(comps)
-    c_norm = [1.0 / math.sqrt(2.0)] + [1.0] * 7
-    cos_tab = [
-        [math.cos((2 * x + 1) * u * math.pi / 16) for u in range(8)]
-        for x in range(8)
-    ]
-    m_basis = np.array(
-        [[c_norm[v] * cos_tab[y][v] for v in range(8)] for y in range(8)]
-    )
+    m_basis = _idct_basis()
     planes = []
     for ci in range(ncomp):
         plane = np.zeros((ph[ci], pw[ci]), dtype=np.int64)
@@ -4941,9 +4403,7 @@ def _decode_jpeg_progressive(content: bytes) -> dict:
     violations, trailing bytes after EOI raise."""
     import numpy as np
 
-    if content[:2] != b"\xff\xd8":
-        raise ValueError("not a JPEG")
-    pos = 2
+    segs = _JpegSegments(content)
     qt: dict[int, list[int]] = {}
     huff: dict[tuple[int, int], dict[tuple[int, int], int]] = {}
     sof = None
@@ -5224,51 +4684,17 @@ def _decode_jpeg_progressive(content: bytes) -> dict:
         if slack > 1 and not (slack == 2 and data[-2:] == b"\xff\x00"):
             raise ValueError(f"trailing bytes in JPEG scan ({slack})")
 
-    while True:
-        if pos + 2 > len(content):
-            raise ValueError("truncated JPEG: marker walk ran out")
-        if content[pos] != 0xFF:
-            raise ValueError(f"corrupt JPEG: lost marker sync at {pos}")
-        marker = content[pos + 1]
-        pos += 2
-        if marker == 0xD9:
-            break
-        if pos + 2 > len(content):
-            raise ValueError("truncated JPEG: segment length cut")
-        ln = int.from_bytes(content[pos : pos + 2], "big")
-        body = content[pos + 2 : pos + ln]
-        if ln < 2 or len(body) < ln - 2:
-            raise ValueError("truncated JPEG: segment body cut")
+    for marker, body in segs:
         if marker == 0xDB:
-            at = 0
-            while at < len(body):
-                pq, tq = body[at] >> 4, body[at] & 0x0F
-                if pq != 0:
-                    raise ValueError("16-bit quant tables not supported")
-                if at + 65 > len(body):
-                    raise ValueError("truncated JPEG: DQT cut")
-                qt[tq] = list(body[at + 1 : at + 65])
-                at += 65
+            _parse_dqt(body, qt)
         elif marker == 0xC4:
-            at = 0
-            while at < len(body):
-                tc, th = body[at] >> 4, body[at] & 0x0F
-                lengths = list(body[at + 1 : at + 17])
-                nsym = sum(lengths)
-                symbols = list(body[at + 17 : at + 17 + nsym])
-                if len(symbols) < nsym:
-                    raise ValueError("truncated JPEG: DHT cut")
-                codes = _canonical_codes(lengths, symbols)
-                huff[(tc, th)] = {(c, n): s for s, (c, n) in codes.items()}
-                at += 17 + nsym
+            _parse_dht(body, huff)
         elif marker == 0xC2:
             parse_sof(body)
         elif marker == 0xDD:
             # DRI (r16): restart intervals decode for real in every
             # progressive scan type.
-            if len(body) < 2:
-                raise ValueError("truncated JPEG: DRI cut")
-            ri_state["ri"] = int.from_bytes(body[:2], "big")
+            ri_state["ri"] = _parse_dri(body)
         elif marker in (0xC0, 0xC1, 0xC3, 0xC5, 0xC6, 0xC7, 0xC9, 0xCA,
                         0xCB, 0xCD, 0xCE, 0xCF):
             raise ValueError("corrupt JPEG: mixed SOF markers")
@@ -5276,7 +4702,7 @@ def _decode_jpeg_progressive(content: bytes) -> dict:
             if sof is None:
                 raise ValueError("JPEG scan before SOF2")
             # entropy data runs to the next non-stuffing, non-RST marker
-            end = pos + ln
+            end = segs.pos
             while True:
                 if end + 1 >= len(content):
                     raise ValueError("truncated JPEG: scan without terminator")
@@ -5290,14 +4716,12 @@ def _decode_jpeg_progressive(content: bytes) -> dict:
                         continue
                     break
                 end += 1
-            do_scan(body, content[pos + ln : end])
+            do_scan(body, content[segs.pos : end])
             saw_scan = True
-            pos = end
-            continue
-        pos += ln
-    if pos != len(content):
+            segs.pos = end
+    if segs.pos != len(content):
         raise ValueError(
-            f"trailing bytes after JPEG EOI ({len(content) - pos})"
+            f"trailing bytes after JPEG EOI ({len(content) - segs.pos})"
         )
     if sof is None or not saw_scan:
         raise ValueError("progressive JPEG missing SOF2 or scans")
@@ -6743,7 +6167,92 @@ PIXEL_STATS_SCHEMA = T.StructType(
 )
 
 
-def pixel_stats(docs: DataFrame) -> DataFrame:
+_PIXEL_STATS_COLS = [f.name for f in PIXEL_STATS_SCHEMA.fields]
+
+
+class _Arm(NamedTuple):
+    """One document's arm of a decode gate."""
+
+    blob: bytes  #: the synthesized media
+    fmt: str  #: the ``fmt`` the decode must report
+    #: decoder of ``blob``; None is ``decode_media(..., strict=True)``
+    decode: Callable[[bytes], dict] | None = None
+    #: frames an animated decode must report (None: not animated)
+    n_frames: int | None = None
+    #: the row's (width, height) in place of the decoded ones
+    dims: tuple[int, int] | None = None
+
+
+#: Decode-gate table: gate name -> ``arm(doc_id) -> _Arm``, filled by
+#: :func:`_decode_gate`.
+DECODE_GATES: dict[str, Callable[[int], _Arm]] = {}
+
+
+def _gate_row(gate: str, did: int, arm: _Arm, d: dict) -> tuple:
+    """One :data:`PIXEL_STATS_SCHEMA` row from a decoded document.  The
+    strict-decode guard: a decode that reports another ``fmt`` (or frame
+    count), or carries no pixels, frames or samples -- header metadata
+    in place of a real decode -- raises, naming the gate and the doc.
+    Pixel tuples and composed frames flatten to their channel values."""
+    if (
+        d.get("fmt") != arm.fmt
+        or not ("pixels" in d or "frames" in d or "samples" in d)
+        or d.get("n_frames") != arm.n_frames
+    ):
+        got = f"fmt={d.get('fmt')!r}, want {arm.fmt!r}"
+        if arm.n_frames is not None:
+            got += f", n_frames={d.get('n_frames')}, want {arm.n_frames}"
+        raise ValueError(
+            f"{gate}: decode degraded for doc {did} ({got}) -- the decode "
+            "must not silently degrade"
+        )
+    if "frames" in d:
+        vals = [v for fr in d["frames"] for px in fr for v in px]
+    elif "pixels" in d:
+        vals = d["pixels"]
+        if vals and isinstance(vals[0], tuple):
+            vals = [v for px in vals for v in px]
+    else:
+        vals = d["samples"]
+    width, height = arm.dims or (d.get("width"), d.get("height"))
+    return (did, d["fmt"], width, height, len(vals), sum(vals), min(vals), max(vals))
+
+
+def _gate_doc(gate: str, did: int) -> tuple:
+    """Synthesize, decode and guard one document of ``gate``."""
+    arm = DECODE_GATES[gate](did)
+    if arm.decode is None:
+        d = decode_media(arm.blob, "application/octet-stream", strict=True)
+    else:
+        d = arm.decode(arm.blob)
+    return _gate_row(gate, did, arm, d)
+
+
+def _decode_gate(arm: Callable[[int], _Arm]) -> Callable[[DataFrame], DataFrame]:
+    """Register ``arm`` in :data:`DECODE_GATES` and return the public
+    operator of the same name and docstring: a narrow Arrow-batched
+    ``mapInPandas`` over ``doc_id`` emitting one exact-integer
+    :data:`PIXEL_STATS_SCHEMA` row per document.  Stats, not pixels,
+    cross back into the JVM, so output width stays O(1) per document
+    regardless of media size."""
+    name = arm.__name__
+    DECODE_GATES[name] = arm
+
+    def gate(docs: DataFrame) -> DataFrame:
+        def batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+            for pdf in it:
+                rows = [_gate_doc(name, int(did)) for did in pdf["doc_id"]]
+                yield pd.DataFrame(rows, columns=_PIXEL_STATS_COLS)
+
+        return docs.select("doc_id").mapInPandas(batches, PIXEL_STATS_SCHEMA)
+
+    gate.__name__ = gate.__qualname__ = name
+    gate.__doc__ = arm.__doc__
+    return gate
+
+
+@_decode_gate
+def pixel_stats(did: int) -> _Arm:
     """REAL pixel/sample decode, oracle-checked: synth a 24-bit BMP,
     binary PPM, 16-bit PCM WAV, real zlib-compressed PNG, real
     LZW-compressed GIF, or real Huffman-coded baseline grayscale JPEG
@@ -6766,67 +6275,32 @@ def pixel_stats(docs: DataFrame) -> DataFrame:
     not pixels, cross back into the JVM, so output width stays O(1) per
     document regardless of media size.
     """
-
-    def batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        cols = [f.name for f in PIXEL_STATS_SCHEMA.fields]
-        for pdf in it:
-            rows = []
-            for doc_id in pdf["doc_id"]:
-                did = int(doc_id)
-                kind = did % 6
-                w, h = did % 16 + 1, (7 * did) % 16 + 1
-                if kind == 0:
-                    blob = synth_bmp(w, h, did)
-                elif kind == 1:
-                    blob = synth_ppm(w, h, did)
-                elif kind == 3:
-                    # alternate sequential / Adam7 layouts (r15): the
-                    # decoded raster is identical, so the one oracle gates
-                    # the interlaced reconstruction too
-                    blob = synth_png_rgb(w, h, did, interlaced=did % 12 >= 6)
-                elif kind == 4:
-                    # same trick for the GIF four-pass interlace
-                    blob = synth_gif_indexed(w, h, did, interlaced=did % 12 >= 6)
-                elif kind == 5:
-                    w, h = 8 * (did % 2 + 1), 8 * ((7 * did) % 2 + 1)
-                    blob = synth_jpeg_gray(w, h, did)
-                else:
-                    n = did % 64 + 1
-                    pcm = b"".join(
-                        (((7 * did + 13 * i) % 65536) - 32768).to_bytes(
-                            2, "little", signed=True
-                        )
-                        for i in range(n)
-                    )
-                    blob = synth_wav(1, 8000, 16, pcm)
-                d = decode_media(blob, "application/octet-stream", strict=True)
-                if d["fmt"] in ("bmp", "ppm", "png", "gif"):
-                    vals = [v for px in d["pixels"] for v in px]
-                    width, height = d["width"], d["height"]
-                elif d["fmt"] == "jpeg_gray":
-                    vals = d["pixels"]  # grayscale: one value per pixel
-                    width, height = d["width"], d["height"]
-                else:
-                    vals = d["samples"]
-                    width = height = None
-                rows.append(
-                    (
-                        did,
-                        d["fmt"],
-                        width,
-                        height,
-                        len(vals),
-                        sum(vals),
-                        min(vals),
-                        max(vals),
-                    )
-                )
-            yield pd.DataFrame(rows, columns=cols)
-
-    return docs.select("doc_id").mapInPandas(batches, PIXEL_STATS_SCHEMA)
+    kind = did % 6
+    w, h = did % 16 + 1, (7 * did) % 16 + 1
+    if kind == 0:
+        return _Arm(synth_bmp(w, h, did), "bmp")
+    if kind == 1:
+        return _Arm(synth_ppm(w, h, did), "ppm")
+    if kind == 3:
+        # alternate sequential / Adam7 layouts (r15): the decoded raster
+        # is identical, so the one oracle gates the interlaced
+        # reconstruction too
+        return _Arm(synth_png_rgb(w, h, did, interlaced=did % 12 >= 6), "png")
+    if kind == 4:
+        # same trick for the GIF four-pass interlace
+        return _Arm(synth_gif_indexed(w, h, did, interlaced=did % 12 >= 6), "gif")
+    if kind == 5:
+        w, h = 8 * (did % 2 + 1), 8 * ((7 * did) % 2 + 1)
+        return _Arm(synth_jpeg_gray(w, h, did), "jpeg_gray")
+    pcm = b"".join(
+        (((7 * did + 13 * i) % 65536) - 32768).to_bytes(2, "little", signed=True)
+        for i in range(did % 64 + 1)
+    )
+    return _Arm(synth_wav(1, 8000, 16, pcm), "wav_pcm")  # no width/height
 
 
-def jpeg_ac_stats(docs: DataFrame) -> DataFrame:
+@_decode_gate
+def jpeg_ac_stats(did: int) -> _Arm:
     """AC-path twin of :func:`pixel_stats` for baseline grayscale JPEG
     (r14 VERDICT What's-wrong #1): every document synthesizes a
     :func:`synth_jpeg_gray_ac` image -- every block carrying a nonzero
@@ -6840,44 +6314,12 @@ def jpeg_ac_stats(docs: DataFrame) -> DataFrame:
     and the full IDCT reconstruct exactly.  Scale posture identical to
     pixel_stats: narrow Arrow-batched mapInPandas, O(1)-width stats
     cross to the JVM, never pixels."""
-
-    def batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        cols = [f.name for f in PIXEL_STATS_SCHEMA.fields]
-        for pdf in it:
-            rows = []
-            for doc_id in pdf["doc_id"]:
-                did = int(doc_id)
-                w, h = 8 * (did % 3 + 1), 8 * ((5 * did) % 3 + 1)
-                d = decode_media(
-                    synth_jpeg_gray_ac(w, h, did),
-                    "application/octet-stream",
-                    strict=True,
-                )
-                if d["fmt"] != "jpeg_gray" or "pixels" not in d:
-                    raise ValueError(
-                        f"jpeg_ac_stats: decode fell back to header metadata "
-                        f"for doc {did} (fmt={d.get('fmt')!r}) -- the AC "
-                        "entropy decode must not silently degrade"
-                    )
-                vals = d["pixels"]
-                rows.append(
-                    (
-                        did,
-                        d["fmt"],
-                        d["width"],
-                        d["height"],
-                        len(vals),
-                        sum(vals),
-                        min(vals),
-                        max(vals),
-                    )
-                )
-            yield pd.DataFrame(rows, columns=cols)
-
-    return docs.select("doc_id").mapInPandas(batches, PIXEL_STATS_SCHEMA)
+    w, h = 8 * (did % 3 + 1), 8 * ((5 * did) % 3 + 1)
+    return _Arm(synth_jpeg_gray_ac(w, h, did), "jpeg_gray")
 
 
-def jpeg_color_stats(docs: DataFrame) -> DataFrame:
+@_decode_gate
+def jpeg_color_stats(did: int) -> _Arm:
     """Color (3-component 4:4:4) twin of :func:`jpeg_ac_stats`: every
     document synthesizes a :func:`synth_jpeg_color` image -- per-component
     Huffman/dequant tables, interleaved MCUs, independent DC predictors,
@@ -6888,44 +6330,12 @@ def jpeg_color_stats(docs: DataFrame) -> DataFrame:
     bit-for-bit (floor division by 65536 is exact: a power-of-two float
     division of a < 2^24 integer).  Scale posture identical to
     pixel_stats: narrow Arrow-batched mapInPandas, O(1)-width stats."""
-
-    def batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        cols = [f.name for f in PIXEL_STATS_SCHEMA.fields]
-        for pdf in it:
-            rows = []
-            for doc_id in pdf["doc_id"]:
-                did = int(doc_id)
-                w, h = 8 * (did % 3 + 1), 8 * ((5 * did) % 3 + 1)
-                d = decode_media(
-                    synth_jpeg_color(w, h, did),
-                    "application/octet-stream",
-                    strict=True,
-                )
-                if d["fmt"] != "jpeg_rgb" or "pixels" not in d:
-                    raise ValueError(
-                        f"jpeg_color_stats: decode fell back to header "
-                        f"metadata for doc {did} (fmt={d.get('fmt')!r}) -- "
-                        "the color decode must not silently degrade"
-                    )
-                vals = [v for px in d["pixels"] for v in px]
-                rows.append(
-                    (
-                        did,
-                        d["fmt"],
-                        d["width"],
-                        d["height"],
-                        len(vals),
-                        sum(vals),
-                        min(vals),
-                        max(vals),
-                    )
-                )
-            yield pd.DataFrame(rows, columns=cols)
-
-    return docs.select("doc_id").mapInPandas(batches, PIXEL_STATS_SCHEMA)
+    w, h = 8 * (did % 3 + 1), 8 * ((5 * did) % 3 + 1)
+    return _Arm(synth_jpeg_color(w, h, did), "jpeg_rgb")
 
 
-def jpeg_partial_mcu_stats(docs: DataFrame) -> DataFrame:
+@_decode_gate
+def jpeg_partial_mcu_stats(did: int) -> _Arm:
     """Partial-MCU twin of the JPEG gates (r15): dimensions deliberately
     NOT multiples of the MCU size, so the decoder must decode the padded
     ceil grid and CROP.  Two arms cycle on doc_id: even docs decode a
@@ -6935,57 +6345,15 @@ def jpeg_partial_mcu_stats(docs: DataFrame) -> DataFrame:
     the DuckDB oracle enumerates pixels and the hash gate proves the
     pad-decode-crop path exactly.  Scale posture identical to
     pixel_stats."""
-
-    def batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        cols = [f.name for f in PIXEL_STATS_SCHEMA.fields]
-        for pdf in it:
-            rows = []
-            for doc_id in pdf["doc_id"]:
-                did = int(doc_id)
-                if did % 2 == 0:
-                    w, h = did % 13 + 3, (5 * did) % 11 + 3
-                    d = decode_media(
-                        synth_jpeg_gray_ac(w, h, did),
-                        "application/octet-stream",
-                        strict=True,
-                    )
-                    if d["fmt"] != "jpeg_gray" or "pixels" not in d:
-                        raise ValueError(
-                            f"jpeg_partial_mcu_stats: gray decode degraded "
-                            f"for doc {did} (fmt={d.get('fmt')!r})"
-                        )
-                    vals = d["pixels"]
-                else:
-                    w, h = did % 19 + 5, (3 * did) % 17 + 5
-                    d = decode_media(
-                        synth_jpeg_color_420(w, h, did),
-                        "application/octet-stream",
-                        strict=True,
-                    )
-                    if d["fmt"] != "jpeg_rgb" or "pixels" not in d:
-                        raise ValueError(
-                            f"jpeg_partial_mcu_stats: color decode degraded "
-                            f"for doc {did} (fmt={d.get('fmt')!r})"
-                        )
-                    vals = [v for px in d["pixels"] for v in px]
-                rows.append(
-                    (
-                        did,
-                        d["fmt"],
-                        d["width"],
-                        d["height"],
-                        len(vals),
-                        sum(vals),
-                        min(vals),
-                        max(vals),
-                    )
-                )
-            yield pd.DataFrame(rows, columns=cols)
-
-    return docs.select("doc_id").mapInPandas(batches, PIXEL_STATS_SCHEMA)
+    if did % 2 == 0:
+        w, h = did % 13 + 3, (5 * did) % 11 + 3
+        return _Arm(synth_jpeg_gray_ac(w, h, did), "jpeg_gray")
+    w, h = did % 19 + 5, (3 * did) % 17 + 5
+    return _Arm(synth_jpeg_color_420(w, h, did), "jpeg_rgb")
 
 
-def jpeg_progressive_stats(docs: DataFrame) -> DataFrame:
+@_decode_gate
+def jpeg_progressive_stats(did: int) -> _Arm:
     """Progressive-scan twin of :func:`jpeg_color_stats`, cycling BOTH
     progressive entropy organizations on doc_id: even docs a
     :func:`synth_jpeg_progressive` spectral-selection 4:4:4 color script
@@ -6997,53 +6365,14 @@ def jpeg_progressive_stats(docs: DataFrame) -> DataFrame:
     step (quant 8).  The oracle carries both arms; a decoder that skips
     or mis-applies any refinement bit cannot hash-match.  Scale posture
     identical to pixel_stats."""
-
-    def batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        cols = [f.name for f in PIXEL_STATS_SCHEMA.fields]
-        for pdf in it:
-            rows = []
-            for doc_id in pdf["doc_id"]:
-                did = int(doc_id)
-                w, h = 8 * (did % 3 + 1), 8 * ((5 * did) % 3 + 1)
-                synth = (
-                    synth_jpeg_progressive
-                    if did % 2 == 0
-                    else synth_jpeg_progressive_refined
-                )
-                want_fmt = "jpeg_rgb" if did % 2 == 0 else "jpeg_gray"
-                d = decode_media(
-                    synth(w, h, did),
-                    "application/octet-stream",
-                    strict=True,
-                )
-                if d["fmt"] != want_fmt or "pixels" not in d:
-                    raise ValueError(
-                        f"jpeg_progressive_stats: decode fell back to "
-                        f"header metadata for doc {did} "
-                        f"(fmt={d.get('fmt')!r})"
-                    )
-                if did % 2 == 0:
-                    vals = [v for px in d["pixels"] for v in px]
-                else:
-                    vals = d["pixels"]
-                rows.append(
-                    (
-                        did,
-                        d["fmt"],
-                        d["width"],
-                        d["height"],
-                        len(vals),
-                        sum(vals),
-                        min(vals),
-                        max(vals),
-                    )
-                )
-            yield pd.DataFrame(rows, columns=cols)
-
-    return docs.select("doc_id").mapInPandas(batches, PIXEL_STATS_SCHEMA)
+    w, h = 8 * (did % 3 + 1), 8 * ((5 * did) % 3 + 1)
+    if did % 2 == 0:
+        return _Arm(synth_jpeg_progressive(w, h, did), "jpeg_rgb")
+    return _Arm(synth_jpeg_progressive_refined(w, h, did), "jpeg_gray")
 
 
-def jpeg_420_stats(docs: DataFrame) -> DataFrame:
+@_decode_gate
+def jpeg_420_stats(did: int) -> _Arm:
     """Chroma-subsampled (4:2:0) twin of :func:`jpeg_color_stats`: Y at
     2x2 sampling (four blocks per 16x16 MCU), chroma at half resolution,
     replication upsampling in the decoder -- the sampling-factor walk,
@@ -7051,44 +6380,12 @@ def jpeg_420_stats(docs: DataFrame) -> DataFrame:
     external oracle, which recomputes every channel from the half-res
     chroma block grid (chroma block = (x//16, y//16), in-block position
     ((x//2)%8, (y//2)%8)).  Scale posture identical to pixel_stats."""
-
-    def batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        cols = [f.name for f in PIXEL_STATS_SCHEMA.fields]
-        for pdf in it:
-            rows = []
-            for doc_id in pdf["doc_id"]:
-                did = int(doc_id)
-                w, h = 16 * (did % 2 + 1), 16 * ((3 * did) % 2 + 1)
-                d = decode_media(
-                    synth_jpeg_color_420(w, h, did),
-                    "application/octet-stream",
-                    strict=True,
-                )
-                if d["fmt"] != "jpeg_rgb" or "pixels" not in d:
-                    raise ValueError(
-                        f"jpeg_420_stats: decode fell back to header "
-                        f"metadata for doc {did} (fmt={d.get('fmt')!r}) -- "
-                        "the subsampled decode must not silently degrade"
-                    )
-                vals = [v for px in d["pixels"] for v in px]
-                rows.append(
-                    (
-                        did,
-                        d["fmt"],
-                        d["width"],
-                        d["height"],
-                        len(vals),
-                        sum(vals),
-                        min(vals),
-                        max(vals),
-                    )
-                )
-            yield pd.DataFrame(rows, columns=cols)
-
-    return docs.select("doc_id").mapInPandas(batches, PIXEL_STATS_SCHEMA)
+    w, h = 16 * (did % 2 + 1), 16 * ((3 * did) % 2 + 1)
+    return _Arm(synth_jpeg_color_420(w, h, did), "jpeg_rgb")
 
 
-def png_filtered_stats(docs: DataFrame) -> DataFrame:
+@_decode_gate
+def png_filtered_stats(did: int) -> _Arm:
     """PNG scanline-filter gate (r16): every document synthesizes a
     :func:`synth_png_rgb_filtered` image -- row ``y`` encoded with filter
     type ``(y + doc_id) % 5``, so with ``height >= 5`` every image
@@ -7101,44 +6398,12 @@ def png_filtered_stats(docs: DataFrame) -> DataFrame:
     proves the full unfilter inversion byte-for-byte.  Scale posture
     identical to the JPEG gates: narrow Arrow-batched mapInPandas,
     O(1)-width stats cross to the JVM, never pixels."""
-
-    def batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        cols = [f.name for f in PIXEL_STATS_SCHEMA.fields]
-        for pdf in it:
-            rows = []
-            for doc_id in pdf["doc_id"]:
-                did = int(doc_id)
-                w, h = did % 13 + 4, (3 * did) % 11 + 5
-                d = decode_media(
-                    synth_png_rgb_filtered(w, h, did),
-                    "application/octet-stream",
-                    strict=True,
-                )
-                if d["fmt"] != "png" or "pixels" not in d:
-                    raise ValueError(
-                        f"png_filtered_stats: decode fell back to header "
-                        f"metadata for doc {did} (fmt={d.get('fmt')!r}) -- "
-                        "the filtered decode must not silently degrade"
-                    )
-                vals = [v for px in d["pixels"] for v in px]
-                rows.append(
-                    (
-                        did,
-                        d["fmt"],
-                        d["width"],
-                        d["height"],
-                        len(vals),
-                        sum(vals),
-                        min(vals),
-                        max(vals),
-                    )
-                )
-            yield pd.DataFrame(rows, columns=cols)
-
-    return docs.select("doc_id").mapInPandas(batches, PIXEL_STATS_SCHEMA)
+    w, h = did % 13 + 4, (3 * did) % 11 + 5
+    return _Arm(synth_png_rgb_filtered(w, h, did), "png")
 
 
-def jpeg_restart_stats(docs: DataFrame) -> DataFrame:
+@_decode_gate
+def jpeg_restart_stats(did: int) -> _Arm:
     """Restart-interval gate (r16), two arms: even documents synthesize
     a BASELINE :func:`synth_jpeg_gray_restart` image (DRI declaring
     ``doc_id % 4 + 1`` MCUs per entropy segment, RSTn markers cycling
@@ -7155,47 +6420,16 @@ def jpeg_restart_stats(docs: DataFrame) -> DataFrame:
     framing byte-for-byte.  Dimensions cross partial-MCU crops.  Scale
     posture identical to the other JPEG gates: narrow Arrow-batched
     mapInPandas, O(1)-width stats cross to the JVM, never pixels."""
-
-    def batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        cols = [f.name for f in PIXEL_STATS_SCHEMA.fields]
-        for pdf in it:
-            rows = []
-            for doc_id in pdf["doc_id"]:
-                did = int(doc_id)
-                if did % 2 == 0:  # baseline arm
-                    w, h = did % 21 + 4, (5 * did) % 17 + 4
-                    blob = synth_jpeg_gray_restart(w, h, did)
-                else:  # progressive arm: restarts in every scan type
-                    w, h = did % 19 + 5, (3 * did) % 15 + 5
-                    blob = synth_jpeg_progressive_restart(w, h, did)
-                d = decode_media(
-                    blob, "application/octet-stream", strict=True
-                )
-                if d["fmt"] != "jpeg_gray" or "pixels" not in d:
-                    raise ValueError(
-                        f"jpeg_restart_stats: decode fell back to header "
-                        f"metadata for doc {did} (fmt={d.get('fmt')!r}) -- "
-                        "the restart decode must not silently degrade"
-                    )
-                vals = d["pixels"]
-                rows.append(
-                    (
-                        did,
-                        d["fmt"],
-                        d["width"],
-                        d["height"],
-                        len(vals),
-                        sum(vals),
-                        min(vals),
-                        max(vals),
-                    )
-                )
-            yield pd.DataFrame(rows, columns=cols)
-
-    return docs.select("doc_id").mapInPandas(batches, PIXEL_STATS_SCHEMA)
+    if did % 2 == 0:  # baseline arm
+        w, h = did % 21 + 4, (5 * did) % 17 + 4
+        return _Arm(synth_jpeg_gray_restart(w, h, did), "jpeg_gray")
+    # progressive arm: restarts in every scan type
+    w, h = did % 19 + 5, (3 * did) % 15 + 5
+    return _Arm(synth_jpeg_progressive_restart(w, h, did), "jpeg_gray")
 
 
-def jpeg12_stats(docs: DataFrame) -> DataFrame:
+@_decode_gate
+def jpeg12_stats(did: int) -> _Arm:
     """12-bit extended-sequential gate (r16): every document synthesizes
     a :func:`synth_jpeg_gray12` image (SOF1, precision 12, constant
     blocks of ``(997*doc_id + 131*bx + 241*by) % 4096``), decodes it
@@ -7207,44 +6441,12 @@ def jpeg12_stats(docs: DataFrame) -> DataFrame:
     ((3*doc_id) % 19 + 4)`` cross partial-MCU crops.  Scale posture
     identical to the other decode gates: narrow Arrow-batched
     mapInPandas, O(1)-width stats cross to the JVM, never pixels."""
-
-    def batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        cols = [f.name for f in PIXEL_STATS_SCHEMA.fields]
-        for pdf in it:
-            rows = []
-            for doc_id in pdf["doc_id"]:
-                did = int(doc_id)
-                w, h = did % 21 + 4, (3 * did) % 19 + 4
-                d = decode_media(
-                    synth_jpeg_gray12(w, h, did),
-                    "application/octet-stream",
-                    strict=True,
-                )
-                if d["fmt"] != "jpeg_gray12" or "pixels" not in d:
-                    raise ValueError(
-                        f"jpeg12_stats: decode fell back to header metadata "
-                        f"for doc {did} (fmt={d.get('fmt')!r}) -- the 12-bit "
-                        "decode must not silently degrade"
-                    )
-                vals = d["pixels"]
-                rows.append(
-                    (
-                        did,
-                        d["fmt"],
-                        d["width"],
-                        d["height"],
-                        len(vals),
-                        sum(vals),
-                        min(vals),
-                        max(vals),
-                    )
-                )
-            yield pd.DataFrame(rows, columns=cols)
-
-    return docs.select("doc_id").mapInPandas(batches, PIXEL_STATS_SCHEMA)
+    w, h = did % 21 + 4, (3 * did) % 19 + 4
+    return _Arm(synth_jpeg_gray12(w, h, did), "jpeg_gray12")
 
 
-def gif_anim_stats(docs: DataFrame) -> DataFrame:
+@_decode_gate
+def gif_anim_stats(did: int) -> _Arm:
     """Animated-GIF composition gate (r17): every document synthesizes a
     :func:`synth_gif_animated` stream (``doc_id % 3 + 2`` sub-rectangle
     frames, per-frame GCE transparency, restore-to-background disposal)
@@ -7259,40 +6461,14 @@ def gif_anim_stats(docs: DataFrame) -> DataFrame:
     ((3*doc_id) % 7 + 4)``.  Scale posture identical to the other
     decode gates: narrow Arrow-batched mapInPandas, O(1)-width stats
     cross to the JVM, never pixels (frames stay inside the batch)."""
-
-    def batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        cols = [f.name for f in PIXEL_STATS_SCHEMA.fields]
-        for pdf in it:
-            rows = []
-            for doc_id in pdf["doc_id"]:
-                did = int(doc_id)
-                w, h = did % 9 + 4, (3 * did) % 7 + 4
-                nf = did % 3 + 2
-                d = decode_gif_frames(synth_gif_animated(w, h, did, nf))
-                if d["fmt"] != "gif_anim" or d["n_frames"] != nf:
-                    raise ValueError(
-                        f"gif_anim_stats: bad decode for doc {did} "
-                        f"(fmt={d.get('fmt')!r}, n_frames={d.get('n_frames')})"
-                    )
-                vals = [v for fr in d["frames"] for px in fr for v in px]
-                rows.append(
-                    (
-                        did,
-                        d["fmt"],
-                        d["width"],
-                        d["height"],
-                        len(vals),
-                        sum(vals),
-                        min(vals),
-                        max(vals),
-                    )
-                )
-            yield pd.DataFrame(rows, columns=cols)
-
-    return docs.select("doc_id").mapInPandas(batches, PIXEL_STATS_SCHEMA)
+    w, h = did % 9 + 4, (3 * did) % 7 + 4
+    nf = did % 3 + 2
+    return _Arm(synth_gif_animated(w, h, did, nf), "gif_anim",
+                decode=decode_gif_frames, n_frames=nf)
 
 
-def png_types_stats(docs: DataFrame) -> DataFrame:
+@_decode_gate
+def png_types_stats(did: int) -> _Arm:
     """PNG sample-layout gate (r17): three arms by ``doc_id % 3`` --
     16-bit grayscale (:func:`synth_png_gray16`), 16-bit RGB
     (:func:`synth_png_rgb16`), and palette at depth
@@ -7308,52 +6484,18 @@ def png_types_stats(docs: DataFrame) -> DataFrame:
     unaligned.  Scale posture identical to the other decode gates:
     narrow Arrow-batched mapInPandas, O(1)-width stats cross to the
     JVM, never pixels."""
-
-    def batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        cols = [f.name for f in PIXEL_STATS_SCHEMA.fields]
-        for pdf in it:
-            rows = []
-            for doc_id in pdf["doc_id"]:
-                did = int(doc_id)
-                w, h = did % 11 + 3, (5 * did) % 9 + 3
-                arm = did % 3
-                if arm == 0:
-                    blob, want = synth_png_gray16(w, h, did), "png_gray16"
-                elif arm == 1:
-                    blob, want = synth_png_rgb16(w, h, did), "png_rgb16"
-                else:
-                    depth = (1, 2, 4, 8)[did % 4]
-                    blob, want = synth_png_palette(w, h, did, depth), "png_palette"
-                d = decode_media(blob, "application/octet-stream", strict=True)
-                if d["fmt"] != want or "pixels" not in d:
-                    raise ValueError(
-                        f"png_types_stats: decode fell back to header "
-                        f"metadata for doc {did} (fmt={d.get('fmt')!r}, "
-                        f"want {want}) -- the decode must not silently "
-                        "degrade"
-                    )
-                if arm == 0:
-                    vals = d["pixels"]
-                else:
-                    vals = [v for px in d["pixels"] for v in px]
-                rows.append(
-                    (
-                        did,
-                        d["fmt"],
-                        d["width"],
-                        d["height"],
-                        len(vals),
-                        sum(vals),
-                        min(vals),
-                        max(vals),
-                    )
-                )
-            yield pd.DataFrame(rows, columns=cols)
-
-    return docs.select("doc_id").mapInPandas(batches, PIXEL_STATS_SCHEMA)
+    w, h = did % 11 + 3, (5 * did) % 9 + 3
+    arm = did % 3
+    if arm == 0:
+        return _Arm(synth_png_gray16(w, h, did), "png_gray16")
+    if arm == 1:
+        return _Arm(synth_png_rgb16(w, h, did), "png_rgb16")
+    depth = (1, 2, 4, 8)[did % 4]
+    return _Arm(synth_png_palette(w, h, did, depth), "png_palette")
 
 
-def jpeg_color12_stats(docs: DataFrame) -> DataFrame:
+@_decode_gate
+def jpeg_color12_stats(did: int) -> _Arm:
     """12-bit COLOR gate (r17), closing the "12-bit color" frontier item:
     every document synthesizes a :func:`synth_jpeg_color12` image (SOF1
     precision 12, 3 components 4:4:4, per-component 12-bit Huffman and
@@ -7367,44 +6509,12 @@ def jpeg_color12_stats(docs: DataFrame) -> DataFrame:
     ((7*doc_id) % 13 + 4)`` cross partial-MCU crops.  Scale posture
     identical to the other decode gates: narrow Arrow-batched
     mapInPandas, O(1)-width stats cross to the JVM, never pixels."""
-
-    def batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        cols = [f.name for f in PIXEL_STATS_SCHEMA.fields]
-        for pdf in it:
-            rows = []
-            for doc_id in pdf["doc_id"]:
-                did = int(doc_id)
-                w, h = did % 17 + 4, (7 * did) % 13 + 4
-                d = decode_media(
-                    synth_jpeg_color12(w, h, did),
-                    "application/octet-stream",
-                    strict=True,
-                )
-                if d["fmt"] != "jpeg_rgb12" or "pixels" not in d:
-                    raise ValueError(
-                        f"jpeg_color12_stats: decode fell back to header "
-                        f"metadata for doc {did} (fmt={d.get('fmt')!r}) -- "
-                        "the 12-bit color decode must not silently degrade"
-                    )
-                vals = [v for px in d["pixels"] for v in px]
-                rows.append(
-                    (
-                        did,
-                        d["fmt"],
-                        d["width"],
-                        d["height"],
-                        len(vals),
-                        sum(vals),
-                        min(vals),
-                        max(vals),
-                    )
-                )
-            yield pd.DataFrame(rows, columns=cols)
-
-    return docs.select("doc_id").mapInPandas(batches, PIXEL_STATS_SCHEMA)
+    w, h = did % 17 + 4, (7 * did) % 13 + 4
+    return _Arm(synth_jpeg_color12(w, h, did), "jpeg_rgb12")
 
 
-def jpeg_arith_stats(docs: DataFrame) -> DataFrame:
+@_decode_gate
+def jpeg_arith_stats(did: int) -> _Arm:
     """Arithmetic-coded JPEG gate (r17): every document synthesizes a
     :func:`synth_jpeg_gray_arith` image -- SOF9, QM-coded DC + (4,4)
     AC under the Annex F statistical models, DAC-declared conditioning,
@@ -7419,44 +6529,12 @@ def jpeg_arith_stats(docs: DataFrame) -> DataFrame:
     + 4)`` cross partial-MCU crops.  Scale posture identical to the
     other decode gates: narrow Arrow-batched mapInPandas, O(1)-width
     stats cross to the JVM, never pixels."""
-
-    def batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        cols = [f.name for f in PIXEL_STATS_SCHEMA.fields]
-        for pdf in it:
-            rows = []
-            for doc_id in pdf["doc_id"]:
-                did = int(doc_id)
-                w, h = did % 21 + 4, (5 * did) % 17 + 4
-                d = decode_media(
-                    synth_jpeg_gray_arith(w, h, did),
-                    "application/octet-stream",
-                    strict=True,
-                )
-                if d["fmt"] != "jpeg_gray" or "pixels" not in d:
-                    raise ValueError(
-                        f"jpeg_arith_stats: decode fell back to header "
-                        f"metadata for doc {did} (fmt={d.get('fmt')!r}) -- "
-                        "the arithmetic decode must not silently degrade"
-                    )
-                vals = d["pixels"]
-                rows.append(
-                    (
-                        did,
-                        d["fmt"],
-                        d["width"],
-                        d["height"],
-                        len(vals),
-                        sum(vals),
-                        min(vals),
-                        max(vals),
-                    )
-                )
-            yield pd.DataFrame(rows, columns=cols)
-
-    return docs.select("doc_id").mapInPandas(batches, PIXEL_STATS_SCHEMA)
+    w, h = did % 21 + 4, (5 * did) % 17 + 4
+    return _Arm(synth_jpeg_gray_arith(w, h, did), "jpeg_gray")
 
 
-def jpeg_hier_stats(docs: DataFrame) -> DataFrame:
+@_decode_gate
+def jpeg_hier_stats(did: int) -> _Arm:
     """Hierarchical-JPEG gate (r17): every document synthesizes a
     :func:`synth_jpeg_gray_hier` pyramid -- DHP, half-width
     non-differential SOF1 reference, EXP horizontal expansion,
@@ -7470,44 +6548,12 @@ def jpeg_hier_stats(docs: DataFrame) -> DataFrame:
     + 4)`` cross partial-MCU crops at BOTH pyramid levels.  Scale
     posture identical to the other decode gates: narrow Arrow-batched
     mapInPandas, O(1)-width stats cross to the JVM, never pixels."""
-
-    def batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        cols = [f.name for f in PIXEL_STATS_SCHEMA.fields]
-        for pdf in it:
-            rows = []
-            for doc_id in pdf["doc_id"]:
-                did = int(doc_id)
-                w, h = did % 19 + 4, (7 * did) % 15 + 4
-                d = decode_media(
-                    synth_jpeg_gray_hier(w, h, did),
-                    "application/octet-stream",
-                    strict=True,
-                )
-                if d["fmt"] != "jpeg_gray_hier" or "pixels" not in d:
-                    raise ValueError(
-                        f"jpeg_hier_stats: decode fell back to header "
-                        f"metadata for doc {did} (fmt={d.get('fmt')!r}) -- "
-                        "the hierarchical decode must not silently degrade"
-                    )
-                vals = d["pixels"]
-                rows.append(
-                    (
-                        did,
-                        d["fmt"],
-                        d["width"],
-                        d["height"],
-                        len(vals),
-                        sum(vals),
-                        min(vals),
-                        max(vals),
-                    )
-                )
-            yield pd.DataFrame(rows, columns=cols)
-
-    return docs.select("doc_id").mapInPandas(batches, PIXEL_STATS_SCHEMA)
+    w, h = did % 19 + 4, (7 * did) % 15 + 4
+    return _Arm(synth_jpeg_gray_hier(w, h, did), "jpeg_gray_hier")
 
 
-def jpeg_arith_prog_stats(docs: DataFrame) -> DataFrame:
+@_decode_gate
+def jpeg_arith_prog_stats(did: int) -> _Arm:
     """Arithmetic-coded progressive JPEG gate (r17): every document
     synthesizes a :func:`synth_jpeg_gray_arith_prog` image -- a
     nine-scan SOF10 script (DC first + two DC refinements, per-band AC
@@ -7524,45 +6570,12 @@ def jpeg_arith_prog_stats(docs: DataFrame) -> DataFrame:
     crops.  Scale posture identical to the other decode gates: narrow
     Arrow-batched mapInPandas, O(1)-width stats cross to the JVM,
     never pixels."""
-
-    def batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        cols = [f.name for f in PIXEL_STATS_SCHEMA.fields]
-        for pdf in it:
-            rows = []
-            for doc_id in pdf["doc_id"]:
-                did = int(doc_id)
-                w, h = did % 21 + 4, (3 * did) % 17 + 4
-                d = decode_media(
-                    synth_jpeg_gray_arith_prog(w, h, did),
-                    "application/octet-stream",
-                    strict=True,
-                )
-                if d["fmt"] != "jpeg_gray" or "pixels" not in d:
-                    raise ValueError(
-                        f"jpeg_arith_prog_stats: decode fell back to header "
-                        f"metadata for doc {did} (fmt={d.get('fmt')!r}) -- "
-                        "the progressive arithmetic decode must not "
-                        "silently degrade"
-                    )
-                vals = d["pixels"]
-                rows.append(
-                    (
-                        did,
-                        d["fmt"],
-                        d["width"],
-                        d["height"],
-                        len(vals),
-                        sum(vals),
-                        min(vals),
-                        max(vals),
-                    )
-                )
-            yield pd.DataFrame(rows, columns=cols)
-
-    return docs.select("doc_id").mapInPandas(batches, PIXEL_STATS_SCHEMA)
+    w, h = did % 21 + 4, (3 * did) % 17 + 4
+    return _Arm(synth_jpeg_gray_arith_prog(w, h, did), "jpeg_gray")
 
 
-def jpeg_lossless_stats(docs: DataFrame) -> DataFrame:
+@_decode_gate
+def jpeg_lossless_stats(did: int) -> _Arm:
     """Lossless-JPEG gate (r17): every document synthesizes a
     :func:`synth_jpeg_gray_lossless` image -- SOF3 predictive coding
     with the predictor selector rotating ``doc_id % 7 + 1`` through
@@ -7577,44 +6590,12 @@ def jpeg_lossless_stats(docs: DataFrame) -> DataFrame:
     ``(doc_id % 23 + 3) x ((5*doc_id) % 19 + 3)``.  Scale posture
     identical to the other decode gates: narrow Arrow-batched
     mapInPandas, O(1)-width stats cross to the JVM, never pixels."""
-
-    def batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        cols = [f.name for f in PIXEL_STATS_SCHEMA.fields]
-        for pdf in it:
-            rows = []
-            for doc_id in pdf["doc_id"]:
-                did = int(doc_id)
-                w, h = did % 23 + 3, (5 * did) % 19 + 3
-                d = decode_media(
-                    synth_jpeg_gray_lossless(w, h, did),
-                    "application/octet-stream",
-                    strict=True,
-                )
-                if d["fmt"] != "jpeg_gray_lossless" or "pixels" not in d:
-                    raise ValueError(
-                        f"jpeg_lossless_stats: decode fell back to header "
-                        f"metadata for doc {did} (fmt={d.get('fmt')!r}) -- "
-                        "the lossless decode must not silently degrade"
-                    )
-                vals = d["pixels"]
-                rows.append(
-                    (
-                        did,
-                        d["fmt"],
-                        d["width"],
-                        d["height"],
-                        len(vals),
-                        sum(vals),
-                        min(vals),
-                        max(vals),
-                    )
-                )
-            yield pd.DataFrame(rows, columns=cols)
-
-    return docs.select("doc_id").mapInPandas(batches, PIXEL_STATS_SCHEMA)
+    w, h = did % 23 + 3, (5 * did) % 19 + 3
+    return _Arm(synth_jpeg_gray_lossless(w, h, did), "jpeg_gray_lossless")
 
 
-def wav_codec_stats(docs: DataFrame) -> DataFrame:
+@_decode_gate
+def wav_codec_stats(did: int) -> _Arm:
     """G.711 audio-codec gate (r17): every document synthesizes a REAL
     compressed WAV -- even doc_ids mu-law (format code 7), odd A-law
     (format code 6), data bytes cycling the FULL 256-entry code space
@@ -7627,39 +6608,7 @@ def wav_codec_stats(docs: DataFrame) -> DataFrame:
     counts ``doc_id % 97 + 16``.  Scale posture identical to the image
     decode gates: narrow Arrow-batched mapInPandas, O(1)-width stats
     cross to the JVM, never samples."""
-
-    def batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        cols = [f.name for f in PIXEL_STATS_SCHEMA.fields]
-        for pdf in it:
-            rows = []
-            for doc_id in pdf["doc_id"]:
-                did = int(doc_id)
-                n = did % 97 + 16
-                law = "alaw" if did % 2 else "ulaw"
-                d = decode_media(
-                    synth_wav_g711(n, did, law),
-                    "application/octet-stream",
-                    strict=True,
-                )
-                if d["fmt"] != f"wav_{law}" or "samples" not in d:
-                    raise ValueError(
-                        f"wav_codec_stats: decode fell back to header "
-                        f"metadata for doc {did} (fmt={d.get('fmt')!r}) -- "
-                        "the G.711 decode must not silently degrade"
-                    )
-                vals = d["samples"]
-                rows.append(
-                    (
-                        did,
-                        d["fmt"],
-                        n,
-                        1,
-                        len(vals),
-                        sum(vals),
-                        min(vals),
-                        max(vals),
-                    )
-                )
-            yield pd.DataFrame(rows, columns=cols)
-
-    return docs.select("doc_id").mapInPandas(batches, PIXEL_STATS_SCHEMA)
+    n = did % 97 + 16
+    law = "alaw" if did % 2 else "ulaw"
+    # one row per sample stream: width = sample count, height = 1
+    return _Arm(synth_wav_g711(n, did, law), f"wav_{law}", dims=(n, 1))

@@ -1127,9 +1127,8 @@ UNION ALL SELECT * FROM jpeg_stats
         "is numpy-checked in tests) -- with exact integer stats over "
         "the decoded values.  The oracle re-derives every stat "
         "arithmetically from range() cross products, so the hash gate "
-        "proves decode(synth(x)) == x per row.  The one remaining stub "
-        "is color/progressive JPEG and codec video payloads.  Scale: "
-        "narrow Arrow-batched mapInPandas; O(1)-width stats cross back "
+        "proves decode(synth(x)) == x per row.  Scale: narrow "
+        "Arrow-batched mapInPandas; O(1)-width stats cross back "
         "to the JVM, never pixels",
     # r12 rotation: promoted to the driver surface (tools/r12_rotation_plan.md).
     # r15 driver-slot rotation (tools/r15_rotation_plan.md): freshness
@@ -2284,49 +2283,26 @@ def emb_ann_ivf(spark: SparkSession, sf_dir: str) -> DataFrame:
     return SIM.ivf_topk(q, assigned, cent, k=5, nprobe=2)
 
 
-#: (applicationId, tag, schema-only?) -> rebroadcast codebook handle; see
-#: the _ivf16 memo note.  Stale-app entries are evicted on access.
-_IVF16_RB_MEMO: dict = {}
-
-
 def _ivf16(spark: SparkSession, sf_dir: str):
     """The (codebook, assignment) pair for the k=16 Lloyd-trained IVF over
     the embeddings fixture, shared by emb_ann_ivf_trained,
     emb_semantic_dedup, and emb_ann_recall_curve -- three queries that all
     train the IDENTICAL codebook.  The codebook is collect-rebroadcast
-    (constant-bounded: 16 x 64 doubles) and the corpus assignment is
-    session-memoized, so a full sweep runs the training lineage and the
-    assignment pass ONCE; at cluster scale that is a shared staging table
+    (constant-bounded: 16 x 64 doubles), and it and the corpus
+    assignment are session-memoized, so a full sweep runs the training
+    lineage and the assignment pass ONCE; at cluster scale that is a shared staging table
     for the assignment and a driver-held codebook (the ivf_train docstring
     pattern)."""
     e = _emb(spark, sf_dir)
     corpus = e.select("vec_id", "embedding")
-    # The rebroadcast handle is memoized per (session, sf_dir) like the
-    # sources/tables.py load() memo (r18, guide section 1.2): without it
-    # every BUILDER INVOCATION re-collected the 16-row codebook -- one
-    # tiny but real Spark job per bench repeat per consumer query (~9
-    # collect jobs per sweep for the three consumers).  A rebuilt
-    # ExistingRDD frame is an immutable local plan; reusing the handle
-    # changes no result.  Keyed on applicationId so a new session never
-    # sees a stale handle (the session_memo eviction rule).
-    from ..config import schema_only_builds
-
-    memo_key = (
-        spark.sparkContext.applicationId,
-        f"ivf16_cent_rb:{sf_dir}",
-        schema_only_builds(),
+    # Memoized as a whole: without it every BUILDER INVOCATION would
+    # re-collect the 16-row codebook -- one tiny but real Spark job per
+    # bench repeat per consumer query.
+    cent = session_memo(
+        spark,
+        f"ivf16_cent:{sf_dir}",
+        lambda: rebroadcast_small(SIM.ivf_train(corpus, k=16)),
     )
-    cent = _IVF16_RB_MEMO.get(memo_key)
-    if cent is None:
-        cent = rebroadcast_small(
-            session_memo(
-                spark, f"ivf16_cent:{sf_dir}", lambda: SIM.ivf_train(corpus, k=16)
-            )
-        )
-        stale = [k for k in _IVF16_RB_MEMO if k[0] != memo_key[0]]
-        for k in stale:
-            del _IVF16_RB_MEMO[k]
-        _IVF16_RB_MEMO[memo_key] = cent
     c = corpus.select(
         "vec_id",
         F.transform(F.col("embedding"), lambda v: v.cast("double")).alias(

@@ -29,6 +29,8 @@ so batch benches are an honest cost model for the stream.
 
 from __future__ import annotations
 
+from collections.abc import Callable
+
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
@@ -537,85 +539,45 @@ def stream_documents(
     return reader.parquet(input_dir)
 
 
-def run_jpeg_ac_stats_stream(
+def run_decode_gate_stream(
     spark: SparkSession,
+    gate: Callable[[DataFrame], DataFrame],
     input_dir: str,
     out_dir: str,
     checkpoint_dir: str,
     max_files_per_trigger: int | None = 1,
 ) -> StreamingQuery:
-    """Streaming twin of the batch ``mm_jpeg_ac_stats`` gate (VERDICT r15
-    task 5): documents arrive as files and flow through the SAME
-    Arrow-batched ``mapInPandas`` decode stage the batch operator uses --
-    ``operators.multimodal.jpeg_ac_stats`` is called on the streaming
-    DataFrame unchanged, which is the point: a narrow stateless decode
-    stage needs no foreachBatch shim, no state store, and no watermark,
-    so the checkpointed parquet sink alone gives exactly-once.
+    """Streaming twin of any batch decode gate (``gate`` is one of
+    ``operators.multimodal.DECODE_GATES``' operators, e.g.
+    ``jpeg_ac_stats``): documents arrive as files and flow through the
+    SAME Arrow-batched ``mapInPandas`` decode stage the batch operator
+    uses -- the gate is called on the streaming DataFrame unchanged,
+    which is the point: a narrow stateless decode stage needs no
+    foreachBatch shim, no state store, and no watermark, so the
+    checkpointed parquet sink alone gives exactly-once, for every gate
+    alike.
 
     Scale posture identical to the batch gate: per-document work, O(1)-width
     stats cross to the JVM (never pixels), and the stage parallelizes by
     input file/partition -- on a real cluster the decode runs wherever the
     micro-batch's input splits land, with no shuffle at all.
     """
-    from ..operators.multimodal import jpeg_ac_stats
-
     docs = stream_documents(
         spark, input_dir, max_files_per_trigger=max_files_per_trigger
     )
-    stats = jpeg_ac_stats(docs)
     return (
-        stats.writeStream.format("parquet")
+        gate(docs).writeStream.format("parquet")
         .option("path", out_dir)
         .option("checkpointLocation", checkpoint_dir)
         .outputMode("append")
-        .queryName("jpeg_ac_stats_stream")
+        .queryName(f"{gate.__name__}_stream")
         .trigger(availableNow=True)
         .start()
     )
 
 
-def read_jpeg_ac_stats(spark: SparkSession, out_dir: str) -> DataFrame:
-    """Batch read-back of the streaming decode sink, schema-pinned."""
-    from ..operators.multimodal import PIXEL_STATS_SCHEMA
-
-    return spark.read.schema(PIXEL_STATS_SCHEMA).parquet(out_dir)
-
-
-def run_jpeg_lossless_stats_stream(
-    spark: SparkSession,
-    input_dir: str,
-    out_dir: str,
-    checkpoint_dir: str,
-    max_files_per_trigger: int | None = 1,
-) -> StreamingQuery:
-    """Streaming twin of the batch ``mm_jpeg_lossless_stats`` gate (r17,
-    the newest decode-family member): identical shape to
-    :func:`run_jpeg_ac_stats_stream` -- the SAME Arrow-batched
-    ``mapInPandas`` predictive-decode stage runs on the streaming
-    DataFrame unchanged, stateless and shuffle-free, so the
-    checkpointed parquet sink alone gives exactly-once.  One twin per
-    decode family: every r17 gate (arithmetic, hierarchical,
-    progressive-arithmetic, lossless) shares this exact stage shape,
-    so the restart/no-dupe proof carries across them."""
-    from ..operators.multimodal import jpeg_lossless_stats
-
-    docs = stream_documents(
-        spark, input_dir, max_files_per_trigger=max_files_per_trigger
-    )
-    stats = jpeg_lossless_stats(docs)
-    return (
-        stats.writeStream.format("parquet")
-        .option("path", out_dir)
-        .option("checkpointLocation", checkpoint_dir)
-        .outputMode("append")
-        .queryName("jpeg_lossless_stats_stream")
-        .trigger(availableNow=True)
-        .start()
-    )
-
-
-def read_jpeg_lossless_stats(spark: SparkSession, out_dir: str) -> DataFrame:
-    """Batch read-back of the lossless streaming decode sink."""
+def read_decode_gate_stats(spark: SparkSession, out_dir: str) -> DataFrame:
+    """Batch read-back of a streaming decode-gate sink, schema-pinned."""
     from ..operators.multimodal import PIXEL_STATS_SCHEMA
 
     return spark.read.schema(PIXEL_STATS_SCHEMA).parquet(out_dir)

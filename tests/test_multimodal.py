@@ -3192,3 +3192,31 @@ def test_pnm_truncation_raises_or_never_fabricates(cutseed, kind):
     except ValueError:
         return
     assert d == full, f"prefix of {cut} bytes decoded DIFFERENT pixels"
+
+
+@pytest.mark.parametrize("gate", sorted(mm.DECODE_GATES))
+def test_decode_gate_arms_and_strict_guard(gate):
+    """Every decode-gate arm decodes doc_ids 0..47 (a full cycle of every
+    arm's ``doc_id`` modulus) to its expected fmt, and the shared
+    strict-decode guard refuses a degraded decode -- a header-only blob's
+    metadata, the right fmt with no pixels or samples, another fmt, or
+    the wrong frame count -- with a ValueError naming the gate and the
+    doc."""
+    arm_of = mm.DECODE_GATES[gate]
+    for did in range(48):
+        row = mm._gate_doc(gate, did)
+        assert row[:2] == (did, arm_of(did).fmt)
+        assert row[4] > 0 and row[6] <= row[7]
+    did = 7
+    arm = arm_of(did)
+    degraded = [
+        mm.decode_media(mm.synth_jpeg(8, 8), "image/jpeg"),
+        {"fmt": arm.fmt, "width": 8, "height": 8},
+        {"fmt": "not-" + arm.fmt, "pixels": [1], "samples": [1]},
+    ]
+    if arm.n_frames is not None:
+        d = arm.decode(arm.blob)
+        degraded.append({**d, "n_frames": arm.n_frames + 1})
+    for d in degraded:
+        with pytest.raises(ValueError, match=rf"^{gate}: .* doc {did} "):
+            mm._gate_row(gate, did, arm, d)

@@ -4,15 +4,15 @@ Usage: python tools/scale_probe_mm.py [k ...]   (default: 1 2 4 8)
 
 The sf0.1 documents fixture is replicated k times with re-keyed doc_ids
 (same scheme as tools/scale_probe_curation.py) and the real registered
-builders run against the replicated dir.  All three operators are narrow
-per-document Arrow-batched `mapInPandas` stages, so rows — and decode
+builders run against the replicated dir.  Every operator is a narrow
+per-document Arrow-batched `mapInPandas` stage, so rows — and decode
 work — must grow exactly k with flat sec/k: a superlinear blow-up would
 mean the decode stage acquired a shuffle or the Arrow batching collapsed
 to per-row crossings.
 
-- `mm_pixel_stats`: REAL BMP/PPM/WAV-PCM decode per row (pixel counts are
-  a bounded function of doc_id % {16,64}, so per-row decode cost is O(1)
-  and total cost is O(rows));
+- the decode gates (`operators.multimodal.DECODE_GATES`, one `mm_<gate>`
+  query each): REAL synth + decode per row, dimensions a bounded
+  function of doc_id, so per-row cost is O(1) and total cost O(rows);
 - `mm_media_headers`: container synth + header parse per row;
 - `mm_media_features`: byte-length/digest features per row.
 
@@ -32,6 +32,9 @@ sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 import pyspark.sql.functions as F  # noqa: E402
 
+from flink_kafka_consumer_cassandra_output_spark.operators.multimodal import (  # noqa: E402
+    DECODE_GATES,
+)
 from flink_kafka_consumer_cassandra_output_spark.plans import all_specs  # noqa: E402
 from flink_kafka_consumer_cassandra_output_spark.session import local_session  # noqa: E402
 
@@ -39,32 +42,10 @@ SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
 REPEATS = int(os.environ.get("SPARK_GRAFT_PROBE_REPEATS", "2"))
 ID_SPACE = 10_000_000
 
-QUERIES = ("mm_pixel_stats", "mm_media_headers", "mm_media_features",
-           # r15 JPEG gates: per-row decode cost is bounded (dims are
-           # a function of doc_id % {2,3}), so sec/k must stay flat
-           "mm_jpeg_ac_stats", "mm_jpeg_color_stats", "mm_jpeg_420_stats",
-           # r16 PNG filter gate: dims bounded by doc_id % {13,11}
-           "mm_png_filtered_stats",
-           # r16 restart-interval gate: dims bounded by doc_id % {21,19}
-           "mm_jpeg_restart_stats",
-           # r16 12-bit SOF1 gate: dims bounded by doc_id % {21,19}
-           "mm_jpeg12_stats",
-           # r17 12-bit color gate: dims bounded by doc_id % {17,13}
-           "mm_jpeg_color12_stats",
-           # r17 PNG layout gate: dims bounded by doc_id % {11,9}
-           "mm_png_types_stats",
-           # r17 animated-GIF gate: dims doc_id % {9,7}, frames % 3 + 2
-           "mm_gif_anim_stats",
-           # r17 arithmetic-coded SOF9 gate: dims doc_id % {21,17}
-           "mm_jpeg_arith_stats",
-           # r17 hierarchical pyramid gate: dims doc_id % {19,15}
-           "mm_jpeg_hier_stats",
-           # r17 arithmetic progressive gate: dims doc_id % {21,17}
-           "mm_jpeg_arith_prog_stats",
-           # r17 lossless predictive gate: dims doc_id % {23,19}
-           "mm_jpeg_lossless_stats",
-           # r17 G.711 audio gate: sample counts doc_id % 97 + 16
-           "mm_wav_codec_stats")
+#: every decode gate's registered query (``mm_`` + gate name), so a new
+#: gate cannot be left out, plus the header and feature stages
+QUERIES = tuple(f"mm_{gate}" for gate in DECODE_GATES) + (
+    "mm_media_headers", "mm_media_features")
 
 #: comma-separated subset override (e.g. re-probing one new gate without
 #: re-timing the whole family)

@@ -22,7 +22,8 @@ import json
 import os
 import sys
 
-sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
+ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+sys.path.insert(0, ROOT)
 
 from tests.oracle import _canon  # noqa: E402
 from flink_kafka_consumer_cassandra_output_spark.plans import all_specs  # noqa: E402
@@ -44,6 +45,11 @@ def main() -> None:
     out_path = sys.argv[1]
     names = sys.argv[2:]
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
+    # Python workers (the mapInPandas decode gates) import the package
+    # too: they inherit PYTHONPATH from the JVM, which inherits it from
+    # here, so it must name the repo root before the session starts.
+    paths = [ROOT] + [p for p in os.environ.get("PYTHONPATH", "").split(os.pathsep) if p]
+    os.environ["PYTHONPATH"] = os.pathsep.join(paths)
     spark = local_session()
     specs = all_specs()
     if not names:
